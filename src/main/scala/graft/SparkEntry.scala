@@ -1608,8 +1608,8 @@ object SparkEntry {
                |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin)
     }),
     // x10: SQL predicate DML — DELETE FROM / UPDATE ... WHERE routed
-    // through the injected parser onto the copy-on-write rewriteWhere
-    // core: zone-map range conjuncts prune candidate files, ONE
+    // through the injected parser onto TxTable's row-level write core
+    // (copy-on-write here): zone-map range conjuncts prune candidate files, ONE
     // discovery scan finds the files actually holding matches, only
     // those rewrite (everything else carried by reference). Idempotent
     // per invocation: a re-run DELETE matches nothing and commits

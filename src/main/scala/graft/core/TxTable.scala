@@ -3,7 +3,7 @@ package graft.core
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, hash, pmod}
-import org.apache.spark.sql.types.{ByteType, DecimalType, DoubleType, FloatType, IntegerType, LongType, ShortType, StringType, StructType}
+import org.apache.spark.sql.types.{ByteType, DecimalType, DoubleType, FloatType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
 
 /** Minimal transactional table on plain parquet — the capability the
   * reference gets from Delta (ascii-hydra `resources/spark.py:65-69`:
@@ -1223,7 +1223,7 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
   // DROP/ADD COLUMN are metadata-only commits that edit the snapshot's
   // logical schema + colMap. Everything internal (data files, manifest
   // stats/bloom keys) stays keyed by PHYSICAL name; translation happens
-  // at exactly two choke points — readEntriesTagged (physical read →
+  // at exactly two choke points — readEntries (physical read →
   // logical rename) and writeDataFiles (logical frame → physical
   // rename) — plus the stat-lookup sites, which map a queried logical
   // column to its physical stats key.
@@ -1258,35 +1258,35 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
   private def toPhysicalDf(df: DataFrame, m: Manifest): DataFrame =
     renameByMap(df, m.colMap)
 
-  private def readEntries(m: Manifest, entries: Seq[FileEntry]): DataFrame =
-    readEntriesTagged(m, entries, None)
-
-  /** [[readEntries]], optionally tagging every row with its source
-    * file's full metadata path (`tag`) — the discovery surface for
-    * predicate DML, which cannot use `input_file_name()` because a
-    * deletion-vector read is a multi-source plan (scan ⋈ DV). */
-  private def readEntriesTagged(m: Manifest, entries: Seq[FileEntry],
-      tag: Option[String]): DataFrame = {
+  /** The live rows of `entries` under snapshot `m`'s logical schema.
+    * `tagged` adds each row's source file (`_metadata.file_path`, as
+    * [[SrcFileCol]]) — the discovery surface for row-level writes,
+    * which cannot use `input_file_name()` because a deletion-vector
+    * read is a multi-source plan (scan ⋈ DV); `positional` also keeps
+    * each row's ([[DvPathCol]], [[DvPosCol]]) position. */
+  private def readEntries(m: Manifest, entries: Seq[FileEntry],
+      tagged: Boolean = false, positional: Boolean = false): DataFrame = {
     // data files carry PHYSICAL column names; the frame surfaces
     // LOGICAL ones (renamed below, after the DV plumbing resolves)
     val schema = physSchemaOf(m)
     val (dved, plain) = entries.partition(_.dvPath.isDefined)
-    def scan(es: Seq[FileEntry]) = {
+    def scan(es: Seq[FileEntry], withPos: Boolean) = {
       val df = spark.read.schema(schema)
         .parquet(es.map(f => new Path(root, f.path).toString): _*)
-      tag.fold(df)(c => df.withColumn(c, col("_metadata.file_path")))
+      val t = if (tagged) df.withColumn(SrcFileCol, col("_metadata.file_path")) else df
+      if (!withPos) t
+      else t.withColumn(DvPathCol, relDataPath)
+        .withColumn(DvPosCol, col("_metadata.row_index"))
     }
-    val tagType = org.apache.spark.sql.types.StructField(
-      tag.getOrElse(""), StringType)
     // the empty frame never touches parquet — logical names directly
-    val logicalSchema = StructType.fromDDL(m.schemaDdl)
-    val emptySchema =
-      if (tag.isEmpty) logicalSchema
-      else StructType(logicalSchema.fields :+ tagType)
+    val emptySchema = StructType(StructType.fromDDL(m.schemaDdl).fields ++
+      (if (tagged) Seq(StructField(SrcFileCol, StringType)) else Nil) ++
+      (if (positional) Seq(StructField(DvPathCol, StringType),
+        StructField(DvPosCol, LongType)) else Nil))
     val df0 =
       if (entries.isEmpty) spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], emptySchema)
-      else if (dved.isEmpty) scan(plain)
+      else if (dved.isEmpty) scan(plain, positional)
       else {
         // merge-on-read: rows listed in the entries' deletion vectors
         // are excluded by a broadcast anti-join on (file, position) —
@@ -1297,13 +1297,11 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
         // restore re-pinned the file to a smaller vector) cannot
         // re-hide restored rows.
         val dv = dvPairs(dved).get
-        val kept = scan(dved)
-          .withColumn(DvPathCol, relDataPath)
-          .withColumn(DvPosCol, col("_metadata.row_index"))
+        val joined = scan(dved, withPos = true)
           .join(org.apache.spark.sql.functions.broadcast(dv),
             Seq(DvPathCol, DvPosCol), "left_anti")
-          .drop(DvPathCol, DvPosCol)
-        if (plain.isEmpty) kept else kept.unionByName(scan(plain))
+        val kept = if (positional) joined else joined.drop(DvPathCol, DvPosCol)
+        if (plain.isEmpty) kept else kept.unionByName(scan(plain, positional))
       }
     // shadow layout columns (should never surface — explicit schema +
     // leaf-file paths) and the bucket column are plumbing, not data
@@ -1591,16 +1589,21 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
       }
     } catch { case scala.util.control.NonFatal(_) => () }
 
-  /** Row-level MERGE, copy-on-write at file granularity. Requires a
-    * bucketed table ([[overwriteBucketed]]). `resolve` receives
-    * (existing rows of the TOUCHED buckets only, source rows) and
-    * returns the new contents of those buckets; files in untouched
-    * buckets are carried into the new snapshot by reference, never
-    * read or rewritten. Cost ∝ |source| + |rows in touched buckets|.
+  /** Row-level MERGE, copy-on-write at file granularity. `resolve`
+    * receives (existing rows of the AFFECTED files only, source rows)
+    * and returns the new contents of those files; every other file is
+    * carried into the new snapshot by reference, never read or
+    * rewritten. A bucketed table ([[overwriteBucketed]]) routes by
+    * bucket: the affected files are those of the buckets the source
+    * touches. Any other layout passes the ON key columns as `keys` and
+    * is planned by zone maps, Blooms and one discovery scan (Delta's
+    * own merge shape for unclustered tables — the reference merges
+    * into any Delta layout, `resources/spark.py:65-67`). Cost ∝
+    * |source| + |rows in affected files|.
     *
     * Concurrency: the merge composes against the snapshot current at
-    * its start; if another commit lands first, it fails (rerun) —
-    * same discipline as [[compact]]. */
+    * its start; a racing commit auto-rebases under the rule of
+    * [[commitRowLevel]], anything else fails with "rerun". */
   def merge(source: DataFrame, txn: Option[(String, Long)] = None,
       sourceIsPinned: Boolean = false, keys: Seq[String] = Nil,
       /** Skip the touched-bucket discovery job and treat EVERY bucket
@@ -1609,343 +1612,13 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
         * each source batch spans the keyspace (state-table upserts):
         * the discovery job + its planning gap is pure overhead. */
       touchAllBuckets: Boolean = false)(
-      resolve: (DataFrame, DataFrame) => DataFrame): Long =
-    if (latestVersion.map(manifest).flatMap(_.bucketSpec).isDefined)
-      mergeOp(OpMerge, source, txn, sourceIsPinned,
-        touchAllBuckets = touchAllBuckets)(resolve)
-    else {
-      require(keys.nonEmpty,
-        s"$root is not bucketed — merge needs explicit key columns " +
-          "(keys = ...) for file-granular planning")
-      mergeOpFiles(OpMerge, source, keys, txn, sourceIsPinned)(resolve)
-    }
-
-  private def mergeOp(op: String, source: DataFrame,
-      txn: Option[(String, Long)], sourceIsPinned: Boolean = false,
-      checkSourceSchema: Boolean = true, touchAllBuckets: Boolean = false)(
       resolve: (DataFrame, DataFrame) => DataFrame): Long = {
-    val v = latestVersion.getOrElse(
-      sys.error(s"$root: merge needs an existing bucketed table"))
-    val m = manifest(v)
-    val spec = m.bucketSpec.getOrElse(
-      sys.error(s"$root is not bucketed — overwriteBucketed first"))
-    // clause merges ([[mergeClauses]]) feed a source whose payload
-    // columns are deliberately NOT table columns (prefixed namespace);
-    // their key columns carry the table names, which is all the
-    // bucket routing below needs
-    // schema evolution (the reference's schema.autoMerge.enabled,
-    // resources/spark.py:68-69, as a TABLE property): a source with
-    // NEW columns widens the table schema at commit; untouched
-    // buckets' files lack the column and null-backfill on read (the
-    // append-widening machinery). Off = the strict refusal below.
-    val autoMerge = boolProp(m, TxTable.PropSchemaAutoMerge).getOrElse(false)
-    if (checkSourceSchema)
-      requireCompatible(StructType.fromDDL(m.schemaDdl),
-        source.schema, allowNew = autoMerge)
-    // pin ONE evaluation of the source (localCheckpoint, the
-    // probeSignatureIndex discipline): it feeds both the touched-
-    // bucket set and the resolve — a non-deterministic source
-    // re-evaluated between the two could hash a key into a bucket
-    // the plan didn't rewrite, silently breaking replace-by-key.
-    // `sourceIsPinned` callers (foreachBatch microbatches: already
-    // materialized, offset-pinned, deterministic by the replay
-    // contract) skip the checkpoint — one fewer full write of the
-    // batch per commit; the touched-set job then reads the pinned
-    // source directly. For the checkpointed path the touched set
-    // rides the checkpoint job itself as an observed metric instead
-    // of a second collect — either way ONE driver-side job before
-    // the write, not two.
-    val bucketed = withBucket(source, spec)
-    val (src, touched0) =
-      if (sourceIsPinned) (bucketed, None)
-      else {
-        val obs = org.apache.spark.sql.Observation()
-        val ckpt = bucketed
-          .observe(obs, org.apache.spark.sql.functions
-            .collect_set(col(BucketCol)).as("touched"))
-          .localCheckpoint(true)
-        (ckpt, Some(obs.get("touched").asInstanceOf[Seq[Int]]
-          .map(_.toString).toSet))
-      }
-    try {
-      // buckets the source touches: bounded by nBuckets, collected as
-      // a model-sized driver list (the c10/probe-id discipline).
-      // touchAllBuckets (WHEN NOT MATCHED BY SOURCE semantics: every
-      // target row participates) reads and rewrites the whole table —
-      // the documented price of a by-source clause, exactly Delta's.
-      val touched: Set[String] =
-        if (touchAllBuckets) (0 until spec.n).map(_.toString).toSet
-        else touched0.getOrElse(
-          src.select(col(BucketCol)).distinct()
-            .collect().map(_.getInt(0).toString).toSet)
-      val (affected, untouched) =
-        m.files.partition(f => f.partition.get(BucketCol).exists(touched))
-      val existing = readEntries(m, affected)
-      val resolved = resolve(existing, src.drop(BucketCol))
-      val (files, schema) = writeDataFiles(bucketedWriteFrame(resolved, spec), Seq(BucketCol))
-      // change-data-feed: row-level diff of the touched buckets,
-      // computed against the files JUST WRITTEN (single resolver
-      // evaluation — the written data is the truth), classified by the
-      // bucket key into pre/post images vs pure inserts/deletes, and
-      // landed as CDC files the commit's delta records. Cost ∝ touched
-      // buckets, like the merge itself; rows the merge left
-      // byte-identical produce NO change rows (exceptAll drops them).
-      val cdcFiles: Option[Seq[FileEntry]] =
-        if (!effCdf(m)) None
-        else Some {
-          val keys = spec.cols
-          val rewritten = readEntries(m, files)
-          // materialize the two diffs ONCE (change-sized): four join
-          // branches below would otherwise re-evaluate each exceptAll
-          // subtree — re-reading the touched buckets per branch (the
-          // dominant cost of a CDC-enabled merge commit, measured 6.1s
-          // vs 1.0s stats-off at sf0.1 before this checkpoint)
-          val del = existing.exceptAll(rewritten).localCheckpoint(true)
-          val ins = rewritten.exceptAll(existing).localCheckpoint(true)
-          val delK = del.select(keys.map(col): _*).distinct()
-          val insK = ins.select(keys.map(col): _*).distinct()
-          val changes = del.join(insK, keys, "left_semi")
-            .withColumn(ChangeTypeCol,
-              org.apache.spark.sql.functions.lit("update_preimage"))
-            .unionByName(del.join(insK, keys, "left_anti")
-              .withColumn(ChangeTypeCol,
-                org.apache.spark.sql.functions.lit("delete")))
-            .unionByName(ins.join(delK, keys, "left_semi")
-              .withColumn(ChangeTypeCol,
-                org.apache.spark.sql.functions.lit("update_postimage")))
-            .unionByName(ins.join(delK, keys, "left_anti")
-              .withColumn(ChangeTypeCol,
-                org.apache.spark.sql.functions.lit("insert")))
-          writeDataFiles(changes, Nil, withStats = false, enforce = false)._1
-        }
-      requireCompatible(StructType.fromDDL(m.schemaDdl), schema,
-        allowNew = autoMerge)
-      if (autoMerge) requireFreshNamesAddressable(m, schema)
-      // the ⊆ check above lets a resolver that DROPS a column pass;
-      // the commit would keep m.schemaDdl and reads would silently
-      // null-backfill that column in the rewritten buckets while
-      // untouched buckets keep real values — require the resolved
-      // field set to cover every table column (modulo __bucket)
-      val resolvedNames = schema.fieldNames.toSet
-      val dropped = StructType.fromDDL(m.schemaDdl).fieldNames
-        .filterNot(n => n == BucketCol || resolvedNames.contains(n))
-      require(dropped.isEmpty,
-        s"merge resolver dropped column(s) ${dropped.mkString(", ")} — " +
-          "resolved rows must keep every table column")
-      val ddl = if (autoMerge) mergedDdl(Some(m), schema) else m.schemaDdl
-      commit { latest =>
-        val cur = latest.getOrElse(
-          sys.error(s"$root vanished during merge — rerun merge"))
-        if (cur.version == m.version)
-          Pending(op, untouched ++ files, ddl, Seq(BucketCol),
-            Some(spec), txn, cdcFiles)
-        else {
-          // AUTO-REBASE (optimistic concurrency with logical conflict
-          // detection, the Delta discipline): a commit that raced in
-          // is harmless iff it left our TOUCHED buckets alone — same
-          // schema and bucket layout, none of the files we read
-          // rewritten, no new files landed in our buckets. Then the
-          // merge result is byte-for-byte what a serial execution
-          // would produce: recompose against the new snapshot
-          // (keeping files the other commit added/removed in OTHER
-          // buckets) and publish. Anything touching our buckets is a
-          // genuine write-write conflict — fail with rerun, which
-          // re-reads the buckets.
-          require(cur.schemaDdl == m.schemaDdl && cur.bucketSpec == m.bucketSpec,
-            s"concurrent schema/layout change during merge into $root — " +
-              "rerun merge")
-          val affectedPaths = affected.map(_.path).toSet
-          val basePaths = m.files.map(_.path).toSet
-          val curFiles = cur.files
-          require(affectedPaths.subsetOf(curFiles.map(_.path).toSet),
-            s"concurrent commit rewrote merged buckets of $root — rerun merge")
-          val intruding = curFiles.exists(f => !basePaths(f.path) &&
-            f.partition.get(BucketCol).exists(touched))
-          require(!intruding,
-            s"concurrent commit added rows to merged buckets of $root — " +
-              "rerun merge")
-          Pending(op, curFiles.filterNot(f => affectedPaths(f.path)) ++ files,
-            ddl, Seq(BucketCol), Some(spec), txn, cdcFiles)
-        }
-      }
-    } finally { if (!sourceIsPinned) { src.unpersist(); () } }
-  }
-
-  /** The non-bucketed twin of [[mergeOp]]: row-level MERGE into a flat
-    * or hive-partitioned table, copy-on-write at FILE granularity,
-    * planned like predicate DML instead of bucket routing (Delta's own
-    * merge shape for unclustered tables — the reference merges into
-    * any Delta layout, `resources/spark.py:65-67`). `keys` are the ON
-    * equi-key TABLE columns the source carries under the table names.
-    * Planning narrows in three sound steps:
-    *
-    *  1. ONE bounded aggregation over the pinned source collects, per
-    *     key column, min/max and an approximate distinct count; small
-    *     key sets re-collect exactly and become IN-list constraints
-    *     (which probe per-file Bloom filters), larger ones degrade to
-    *     [min,max] zone-map ranges. Files failing the candidate test
-    *     provably hold no source key.
-    *  2. ONE discovery scan semi-joins the candidate files with the
-    *     distinct source keys — only files ACTUALLY holding matching
-    *     rows become affected (parquet row-group pushdown serves it).
-    *  3. `resolve` sees exactly the affected files' rows; its output
-    *     (replacements + inserts) is rewritten with the table's own
-    *     hive layout. Every other file is carried by reference,
-    *     byte-identical. Cost ∝ |source| + |rows in matching files|.
-    *
-    * CDC capture, schema evolution, and the auto-rebase concurrency
-    * rule mirror [[mergeOp]]; the intruding-file test reuses the same
-    * candidate filter that planned the merge. */
-  private def mergeOpFiles(op: String, source: DataFrame, keys: Seq[String],
-      txn: Option[(String, Long)], sourceIsPinned: Boolean = false,
-      checkSourceSchema: Boolean = true, touchAllFiles: Boolean = false)(
-      resolve: (DataFrame, DataFrame) => DataFrame): Long = {
-    import org.apache.spark.sql.catalyst.expressions.{
-      AttributeReference, GreaterThanOrEqual, In, LessThanOrEqual, Literal}
-    import org.apache.spark.sql.functions.{
-      approx_count_distinct, max => fmax, min => fmin}
-    val v = latestVersion.getOrElse(
-      sys.error(s"$root: merge needs an existing table"))
-    val m = manifest(v)
-    require(m.bucketSpec.isEmpty,
-      s"internal: bucketed $root routes through mergeOp")
-    val schema = StructType.fromDDL(m.schemaDdl)
-    val keyFields = keys.map(k => schema.fields
-      .find(_.name.equalsIgnoreCase(k))
-      .getOrElse(sys.error(s"$root has no merge key column $k")))
-    val keyNames = keyFields.map(_.name)
-    val autoMerge = boolProp(m, TxTable.PropSchemaAutoMerge).getOrElse(false)
-    if (checkSourceSchema)
-      requireCompatible(schema, source.schema, allowNew = autoMerge)
-    // pin ONE evaluation (the mergeOp discipline): the source feeds
-    // candidate pruning, discovery, AND the resolve
-    val src = if (sourceIsPinned) source else source.localCheckpoint(true)
-    try {
-      // step 1: the candidate test (also the rebase intruder test)
-      val candidate: FileEntry => Boolean =
-        if (touchAllFiles) _ => true
-        else {
-          val aggs = keyFields.flatMap { f => Seq(
-            fmin(col(s"`${f.name}`")).as(s"mn_${f.name}"),
-            fmax(col(s"`${f.name}`")).as(s"mx_${f.name}"),
-            approx_count_distinct(col(s"`${f.name}`")).as(s"nd_${f.name}")) }
-          val row = src.agg(aggs.head, aggs.tail: _*).head()
-          // a key whose source values are ALL null (or an empty
-          // source) matches nothing — no file is a candidate, the
-          // merge reduces to its pure-insert branch
-          if (keyFields.exists(f => row.getAs[Any](s"mn_${f.name}") == null))
-            _ => false
-          else {
-            val preds = keyFields.flatMap { f =>
-              val attr = AttributeReference(f.name, f.dataType)()
-              val smallSet: Option[Seq[Any]] =
-                if (row.getAs[Long](s"nd_${f.name}") > TxTable.MergeInListCap)
-                  None
-                else {
-                  val vs = src.select(col(s"`${f.name}`"))
-                    .where(col(s"`${f.name}`").isNotNull).distinct()
-                    .limit(TxTable.MergeInListCap + 1)
-                    .collect().map(_.get(0)).toSeq
-                  if (vs.size > TxTable.MergeInListCap) None else Some(vs)
-                }
-              smallSet match {
-                case Some(vs) =>
-                  Seq(In(attr, vs.map(x => Literal.create(x, f.dataType))))
-                case None => Seq(
-                  GreaterThanOrEqual(attr,
-                    Literal.create(row.getAs[Any](s"mn_${f.name}"), f.dataType)),
-                  LessThanOrEqual(attr,
-                    Literal.create(row.getAs[Any](s"mx_${f.name}"), f.dataType)))
-              }
-            }
-            candidateFilter(schema, preds, physNameOf(m, _))
-          }
-        }
-      val candidates = m.files.filter(candidate)
-      // step 2: discovery — which candidates actually hold source keys
-      val srcFileCol = "__src_file"
-      val affectedPaths: Set[String] =
-        if (touchAllFiles) m.files.map(_.path).toSet
-        else if (candidates.isEmpty) Set.empty
-        else {
-          val keyFrame = src
-            .select(keyNames.map(k => col(s"`$k`")): _*).distinct()
-          readEntriesTagged(m, candidates, Some(srcFileCol))
-            .join(keyFrame, keyNames, "left_semi")
-            .select(col(srcFileCol)).distinct().collect()
-            .map(r => relativize(new Path(new java.net.URI(r.getString(0)))))
-            .toSet
-        }
-      val (affected, untouched) = m.files.partition(f => affectedPaths(f.path))
-      // step 3: resolve over the affected files' rows only
-      val existing = readEntries(m, affected)
-      val resolved = resolve(existing, src)
-      val (files, outSchema) = writeDataFiles(resolved, m.partitionCols)
-      // change-data-feed: identical classification to mergeOp, keyed
-      // on the merge keys; cost ∝ affected files
-      val cdcFiles: Option[Seq[FileEntry]] =
-        if (!effCdf(m)) None
-        else Some {
-          val rewritten = readEntries(m, files)
-          // one evaluation per diff (the mergeOp discipline): the four
-          // branches below otherwise re-read the affected files each
-          val del = existing.exceptAll(rewritten).localCheckpoint(true)
-          val ins = rewritten.exceptAll(existing).localCheckpoint(true)
-          val delK = del.select(keyNames.map(col): _*).distinct()
-          val insK = ins.select(keyNames.map(col): _*).distinct()
-          val changes = del.join(insK, keyNames, "left_semi")
-            .withColumn(ChangeTypeCol,
-              org.apache.spark.sql.functions.lit("update_preimage"))
-            .unionByName(del.join(insK, keyNames, "left_anti")
-              .withColumn(ChangeTypeCol,
-                org.apache.spark.sql.functions.lit("delete")))
-            .unionByName(ins.join(delK, keyNames, "left_semi")
-              .withColumn(ChangeTypeCol,
-                org.apache.spark.sql.functions.lit("update_postimage")))
-            .unionByName(ins.join(delK, keyNames, "left_anti")
-              .withColumn(ChangeTypeCol,
-                org.apache.spark.sql.functions.lit("insert")))
-          writeDataFiles(changes, Nil, withStats = false, enforce = false)._1
-        }
-      requireCompatible(schema, outSchema, allowNew = autoMerge)
-      if (autoMerge) requireFreshNamesAddressable(m, outSchema)
-      val resolvedNames = outSchema.fieldNames.toSet
-      val dropped = schema.fieldNames
-        .filterNot(n => n == BucketCol || resolvedNames.contains(n))
-      require(dropped.isEmpty,
-        s"merge resolver dropped column(s) ${dropped.mkString(", ")} — " +
-          "resolved rows must keep every table column")
-      val ddl = if (autoMerge) mergedDdl(Some(m), outSchema) else m.schemaDdl
-      commit { latest =>
-        val cur = latest.getOrElse(
-          sys.error(s"$root vanished during merge — rerun merge"))
-        if (cur.version == m.version)
-          Pending(op, untouched ++ files, ddl, m.partitionCols, None,
-            txn, cdcFiles)
-        else {
-          // auto-rebase (the mergeOp discipline, file flavor): a
-          // racing commit is harmless iff it left our affected files
-          // untouched AND added nothing the candidate test could
-          // match (an added file passing it might hold source keys —
-          // a serial execution would have merged into it)
-          require(cur.schemaDdl == m.schemaDdl && cur.bucketSpec.isEmpty &&
-              cur.partitionCols == m.partitionCols,
-            s"concurrent schema/layout change during merge into $root — " +
-              "rerun merge")
-          require(affectedPaths.subsetOf(cur.files.map(_.path).toSet),
-            s"concurrent commit rewrote files being merged in $root — " +
-              "rerun merge")
-          val basePaths = m.files.map(_.path).toSet
-          val intruding = cur.files
-            .filter(f => !basePaths(f.path)).filter(candidate)
-          require(intruding.isEmpty,
-            s"concurrent commit added possibly-matching rows to $root — " +
-              "rerun merge")
-          Pending(op, cur.files.filterNot(f => affectedPaths(f.path)) ++ files,
-            ddl, m.partitionCols, None, txn, cdcFiles)
-        }
-      }
-    } finally { if (!sourceIsPinned) { src.unpersist(); () } }
+    val spec = latestVersion.map(manifest).flatMap(_.bucketSpec)
+    require(spec.isDefined || keys.nonEmpty,
+      s"$root is not bucketed — merge needs explicit key columns " +
+        "(keys = ...) for file-granular planning")
+    mergeRows(OpMerge, source, spec.fold(keys)(_.cols), txn, sourceIsPinned,
+      touchAll = spec.isDefined && touchAllBuckets)(Some(resolve))
   }
 
   /** MERGE INTO t USING source ON keys WHEN MATCHED THEN UPDATE SET *
@@ -1953,34 +1626,30 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     * rows, new keys insert; source must be unique per key. Bucketed
     * tables rewrite only the buckets containing source keys;
     * non-bucketed tables pass the ON key columns via `keys` and
-    * rewrite only the FILES containing source keys (zone-map/Bloom
-    * planned, [[mergeOpFiles]]). */
+    * rewrite only the FILES containing source keys. Through a
+    * `deletionVectors` handle a bucketed upsert is MERGE-ON-READ
+    * instead: matched rows fold into a deletion vector and the source
+    * appends — O(batch) writes, the streaming state-table path. */
   def upsert(source: DataFrame, txn: Option[(String, Long)] = None,
       sourceIsPinned: Boolean = false, keys: Seq[String] = Nil): Long = {
-    val spec = latestVersion.map(manifest).flatMap(_.bucketSpec)
+    val m = latestVersion.map(manifest)
+    val spec = m.flatMap(_.bucketSpec)
     val onKeys = spec.map(_.cols).getOrElse {
       require(keys.nonEmpty,
         s"$root is not bucketed — upsert needs explicit key columns " +
           "(keys = ...)")
       keys
     }
-    val resolve: (DataFrame, DataFrame) => DataFrame = { (existing, src) =>
-      // allowMissingColumns: under schemaAutoMerge a widened source's
-      // new column null-backfills the kept rows (and a subset source
-      // null-fills its own missing columns, the append discipline)
-      existing.join(src.select(onKeys.map(col): _*).distinct(),
-          onKeys, "left_anti")
-        .unionByName(src, allowMissingColumns = true)
-    }
-    if (spec.isDefined) {
-      // deletionVectors handles upsert MERGE-ON-READ: matched rows
-      // fold into a DV, the source appends — O(batch) writes, the
-      // streaming state-table path (see [[morUpsertBucketed]])
-      if (latestVersion.map(v => effDv(manifest(v))).getOrElse(deletionVectors))
-        morUpsertBucketed(source, manifest(latestVersion.get), txn,
-          sourceIsPinned)
-      else merge(source, txn, sourceIsPinned)(resolve)
-    } else mergeOpFiles(OpMerge, source, onKeys, txn, sourceIsPinned)(resolve)
+    mergeRows(OpMerge, source, onKeys, txn, sourceIsPinned)(
+      if (spec.isDefined && effDv(m.get)) None
+      else Some { (existing, src) =>
+        // allowMissingColumns: under schemaAutoMerge a widened source's
+        // new column null-backfills the kept rows (and a subset source
+        // null-fills its own missing columns, the append discipline)
+        existing.join(src.select(onKeys.map(col): _*).distinct(),
+            onKeys, "left_anti")
+          .unionByName(src, allowMissingColumns = true)
+      })
   }
 
   /** Full-clause MERGE — the complete `MERGE INTO t USING s ON keys
@@ -2023,7 +1692,7 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     val tableSchema = StructType.fromDDL(m.schemaDdl)
     // bucketed: the ON keys must cover the bucket keys (routing hashes
     // them). Non-bucketed: the ON conjuncts themselves define the join
-    // keys — any table columns ([[mergeOpFiles]] plans by zone map)
+    // keys — any table columns ([[keyCandidate]] plans by zone map)
     val keys = specOpt.map(_.cols).getOrElse(
       sourceKeys.keys.toSeq.map(k => tableSchema.fields
         .find(_.name.equalsIgnoreCase(k))
@@ -2141,12 +1810,8 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
       j.where(org.apache.spark.sql.functions.not(coalesce(drop, flit(false))))
         .select(tableCols.map(valueOf): _*)
     }
-    if (specOpt.isDefined)
-      mergeOp(OpMerge, keyed, txn, checkSourceSchema = false,
-        touchAllBuckets = notMatchedBySource.nonEmpty)(resolve)
-    else
-      mergeOpFiles(OpMerge, keyed, keys, txn, checkSourceSchema = false,
-        touchAllFiles = notMatchedBySource.nonEmpty)(resolve)
+    mergeRows(OpMerge, keyed, keys, txn, checkSourceSchema = false,
+      touchAll = notMatchedBySource.nonEmpty)(Some(resolve))
   }
 
   /** Row-level DELETE by key (copy-on-write) — the GDPR/CDC surface:
@@ -2163,11 +1828,9 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
           "columns (keyCols = ...)")
       keyCols
     }
-    val resolve: (DataFrame, DataFrame) => DataFrame = { (existing, src) =>
+    mergeRows(OpDelete, keys, cols, txn, sourceIsPinned)(Some { (existing, src) =>
       existing.join(src.select(cols.map(col): _*).distinct(), cols, "left_anti")
-    }
-    if (spec.isDefined) mergeOp(OpDelete, keys, txn, sourceIsPinned)(resolve)
-    else mergeOpFiles(OpDelete, keys, cols, txn, sourceIsPinned)(resolve)
+    })
   }
 
   /** Partition-level DELETE: drop every file whose partition values
@@ -2187,17 +1850,10 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     val v = latestVersion.getOrElse(sys.error(s"$root has no committed snapshots"))
     val m = manifest(v)
     require(m.partitionCols.nonEmpty, s"$root is not partitioned")
-    val matching = m.files.filter(f => pred(f.partition)).map(_.path).toSet
-    val cdcFiles: Option[Seq[FileEntry]] =
-      if (!effCdf(m)) None
-      else {
-        val dropped = m.files.filter(f => pred(f.partition))
-        if (dropped.isEmpty) Some(Nil) // CDF commit that changed nothing
-        else Some(writeDataFiles(
-          readEntries(m, dropped).withColumn(ChangeTypeCol,
-            org.apache.spark.sql.functions.lit("delete")),
-          Nil, withStats = false, enforce = false)._1)
-      }
+    val dropped = m.files.filter(f => pred(f.partition))
+    val matching = dropped.map(_.path).toSet
+    val cdcFiles = captureChanges(m)(
+      if (dropped.isEmpty) Nil else Seq(changeImages(readEntries(m, dropped), "delete")))
     commit { latest =>
       val cur = latest.getOrElse(
         sys.error(s"$root vanished during deletePartitions — rerun"))
@@ -2215,364 +1871,46 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     }
   }
 
-  /** Row-level DELETE by PREDICATE, copy-on-write at file granularity
-    * on ANY layout (flat, hive-partitioned, or bucketed) — the
-    * `DELETE FROM t WHERE cond` surface. Planning in three narrowing
-    * steps, each sound on its own: (1) the predicate's range conjuncts
-    * prune CANDIDATE files against the manifest zone maps (partition
-    * and bucket-layout columns participate for free — they are data
-    * columns whose per-file stats are min=max=value); (2) ONE
-    * discovery job over the candidates finds which files actually
-    * hold matching rows (parquet row-group pushdown serves this scan);
-    * (3) only those files are read back and rewritten without the
-    * matching rows — every other file is carried by reference,
-    * byte-identical. A predicate matching zero rows commits NOTHING
-    * (no new version). Rows where `cond` evaluates NULL are kept
-    * (SQL DELETE semantics).
+  /** Row-level DELETE by PREDICATE on ANY layout (flat,
+    * hive-partitioned, or bucketed) — the `DELETE FROM t WHERE cond`
+    * surface. Planning in three narrowing steps, each sound on its
+    * own: (1) the predicate's conjuncts prune CANDIDATE files against
+    * the manifest zone maps and Blooms (partition and bucket-layout
+    * columns participate for free — they are data columns whose
+    * per-file stats are min=max=value); (2) ONE discovery job over the
+    * candidates finds which files actually hold matching rows (parquet
+    * row-group pushdown serves this scan); (3) only those files
+    * change — rewritten without the matching rows (copy-on-write), or,
+    * through a `deletionVectors` handle, left byte-identical while ONE
+    * parquet side-file of (data-file path, row position) pairs hides
+    * the rows (merge-on-read: write cost O(matching rows), never
+    * O(bytes of touched files); a file already carrying a vector gets
+    * the accumulated union, and its previously deleted rows are
+    * excluded from discovery, so they cannot re-enter). Every other
+    * file is carried by reference. A predicate matching zero rows
+    * commits NOTHING (no new version). Rows where `cond` evaluates
+    * NULL are kept (SQL DELETE semantics).
     *
     * Through a `changeDataFeed=true` handle the deleted rows land as
-    * CDC delete records in the commit delta. A racing commit
-    * auto-rebases iff it provably could not change the result: same
-    * schema/layout, none of the rewritten files touched, and no added
-    * file passing the zone-map candidate test; anything else is a
-    * loud conflict (rerun re-plans against the new snapshot). */
-  def deleteWhere(cond: Column): Long =
-    if (latestVersion.map(v => effDv(manifest(v))).getOrElse(deletionVectors))
-      deleteWhereMoR(cond)
-    else rewriteWhere(OpDelete, cond)(matching => matching.limit(0))
-
-  /** Merge-on-read DELETE (the `deletionVectors=true` handle path):
-    * the same three-step planning as the copy-on-write delete, but
-    * instead of rewriting the affected files it lands ONE parquet
-    * side-file of (data-file path, row position) pairs and re-tags the
-    * affected entries to reference it — write cost O(matching rows),
-    * never O(bytes of touched files). A file already carrying a DV
-    * gets the accumulated union (its previously deleted positions are
-    * excluded from the discovery scan, so they cannot re-enter). Reads
-    * exclude DV rows via a broadcast anti-join (see readEntries);
-    * compact/rewrites of a DV'd file purge its vector. CDF handles
-    * capture the deleted rows exactly like the copy-on-write path.
-    * Zero matches commit nothing. Concurrency: same auto-rebase rule
-    * as the copy-on-write delete — a racing commit is harmless iff it
-    * left the affected entries untouched and added nothing the
-    * predicate's zone-map candidate test could match. */
-  private def deleteWhereMoR(cond: Column): Long =
-    morRewrite(OpDelete, cond, None)
-
-  /** Merge-on-read UPDATE: the matching rows' positions land in the
-    * vector exactly like [[deleteWhereMoR]] (hiding the pre-update
-    * rows), and the SET-applied replacements append as NEW data files
-    * (layout recomputed from the new values — relocation across
-    * partitions/buckets works by construction). Write cost
-    * O(matching rows), data files byte-identical. */
-  private def updateWhereMoR(cond: Column, set: Map[String, Column]): Long =
-    morRewrite(OpUpdate, cond, Some { matching =>
-      val fields = matching.schema.fieldNames
-        .filterNot(_.startsWith(PartShadowPrefix))
-      val resolved = set.map { case (k, vcol) =>
-        fields.find(_.equalsIgnoreCase(k)).getOrElse(
-          sys.error(s"$root has no column $k to update")) -> vcol
-      }
-      // one select = simultaneous assignment (the SQL rule)
-      matching.select(fields.filterNot(_ == BucketCol).map(n =>
-        resolved.getOrElse(n, matching.col(s"`$n`")).as(n)).toIndexedSeq: _*)
-    })
-
-  /** Shared merge-on-read core: vector the matching rows' positions;
-    * `replace` (None = DELETE) maps them to replacement rows appended
-    * as new files. */
-  private def morRewrite(op: String, cond: Column,
-      replace: Option[DataFrame => DataFrame]): Long = {
-    import org.apache.spark.sql.functions.{broadcast, coalesce, count => fcount, first => ffirst, lit => flit}
-    val v = latestVersion.getOrElse(
-      sys.error(s"$root has no committed snapshots"))
-    val m = manifest(v)
-    val schema = StructType.fromDDL(m.schemaDdl)
-    val hit = coalesce(cond, flit(false)) // NULL predicate keeps the row
-    val candidate = candidateFilter(schema,
-      analyzedPredicate(schema, cond).toSeq, physNameOf(m, _))
-    val candidates = m.files.filter(candidate)
-    if (candidates.isEmpty) return v
-    // discovery scan over the candidates, position-tagged; rows
-    // already deleted by the candidates' existing DVs are excluded so
-    // re-deleting is a no-op and vectors never hold duplicates. The
-    // full metadata path rides along because the DV key is the RAW
-    // symmetric extraction (possibly URI-encoded) while manifest
-    // entries hold decoded paths — the driver maps between the two
-    // through URI parsing, never by re-encoding.
-    val fullCol = "__dv_file"
-    val tagged0 = spark.read.schema(physSchemaOf(m))
-      .parquet(candidates.map(f => new Path(root, f.path).toString): _*)
-      .withColumn(fullCol, col("_metadata.file_path"))
-      .withColumn(DvPathCol, relDataPath)
-      .withColumn(DvPosCol, col("_metadata.row_index"))
-    val taggedPhys = dvPairs(candidates) match {
-      case None     => tagged0
-      case Some(dv) => tagged0.join(broadcast(dv),
-        Seq(DvPathCol, DvPosCol), "left_anti")
-    }
-    val tagged = toLogicalDf(taggedPhys, m)
-    val matching = tagged.where(hit)
-    // per-file deleted-row counts drive the affected set, the entries'
-    // dvRows bookkeeping, AND the raw↔decoded path mapping — one
-    // driver action, ≤ one row per candidate file
-    val stats = matching.groupBy(col(DvPathCol))
-      .agg(fcount(flit(1)).as("n"), ffirst(col(fullCol)).as("full"))
-      .collect()
-    if (stats.isEmpty) return v // zero matches: no commit at all
-    val rawToRel = stats.map(r => r.getString(0) ->
-      relativize(new Path(new java.net.URI(r.getAs[String]("full"))))).toMap
-    val freshCounts = stats.map(r =>
-      rawToRel(r.getString(0)) -> r.getAs[Long]("n")).toMap
-    val affectedRaw = rawToRel.keySet
-    val affectedPaths = rawToRel.values.toSet
-    val (affected, untouched) = m.files.partition(f => affectedPaths(f.path))
-    val fresh = matching.select(col(DvPathCol), col(DvPosCol))
-    // the new vector: fresh deletions ∪ the affected files' PRIOR
-    // vectors (one DV per entry — later deletes replace, never chain;
-    // [[dvPairs]] scopes each affected file to the sidecar it pins);
-    // prior rows of UNaffected files stay served by their old DV file,
-    // which remains live while any entry references it
-    val dvContent = dvPairs(affected) match {
-      case None        => fresh
-      case Some(prior) => fresh.unionByName(prior)
-    }
-    // one file: a vector is deleted-row-sized metadata, not data
-    val (dvEntries, _) = writeDataFiles(dvContent.coalesce(1), Nil,
-      withStats = false, enforce = false)
-    val dvFile = dvEntries match {
-      case Seq(one) => one.path
-      case other    => sys.error(s"$root: DV write produced ${other.size} files")
-    }
-    val priorRows = affected.map(f => f.path -> f.dvRows).toMap
-    val retagged = affected.map(f => f.copy(
-      dvPath = Some(dvFile),
-      dvRows = priorRows.getOrElse(f.path, 0L) + freshCounts(f.path)))
-    // UPDATE: the SET-applied replacements append as new files with
-    // the layout recomputed from the NEW values
-    val cleanMatching = matching.drop(fullCol, DvPathCol, DvPosCol)
-    val newFiles: Seq[FileEntry] = replace match {
-      case None => Nil
-      case Some(f) =>
-        val replaced = f(cleanMatching.drop(BucketCol))
-        requireCompatible(schema, replaced.schema, allowNew = false)
-        val replacedNames = replaced.schema.fieldNames.toSet
-        val droppedCols = schema.fieldNames.filterNot(n =>
-          n == BucketCol || replacedNames.contains(n))
-        require(droppedCols.isEmpty,
-          s"$op dropped column(s) ${droppedCols.mkString(", ")} — " +
-            "rewritten rows must keep every table column")
-        val data = m.bucketSpec.map(withBucket(replaced, _)).getOrElse(replaced)
-        writeDataFiles(data, m.partitionCols)._1
-    }
-    val cdcFiles: Option[Seq[FileEntry]] =
-      if (!effCdf(m)) None
-      else Some {
-        val changes = replace match {
-          case None => cleanMatching.drop(BucketCol)
-            .withColumn(ChangeTypeCol, flit("delete"))
-          case Some(_) =>
-            val post = readEntries(
-              Manifest(m.version, op, m.schemaDdl, Nil, m.partitionCols,
-                m.bucketSpec, colMap = m.colMap, retired = m.retired),
-              newFiles)
-            cleanMatching.drop(BucketCol)
-              .withColumn(ChangeTypeCol, flit("update_preimage"))
-              .unionByName(post.withColumn(ChangeTypeCol,
-                flit("update_postimage")))
-        }
-        writeDataFiles(changes, Nil, withStats = false, enforce = false)._1
-      }
-    commit { latest =>
-      val cur = latest.getOrElse(sys.error(s"$root vanished during $op — rerun"))
-      if (cur.version == m.version)
-        Pending(op, untouched ++ retagged ++ newFiles, m.schemaDdl,
-          m.partitionCols, m.bucketSpec, None, cdcFiles)
-      else {
-        require(cur.schemaDdl == m.schemaDdl &&
-            cur.bucketSpec == m.bucketSpec &&
-            cur.partitionCols == m.partitionCols,
-          s"concurrent schema/layout change during $op on $root — rerun")
-        val curByPath = cur.files.map(f => f.path -> f).toMap
-        // the affected ENTRIES (path + current DV) must be untouched —
-        // a racing MoR write re-tagging the same file is a genuine
-        // conflict (both built vectors against the same prior state)
-        require(affected.forall(f => curByPath.get(f.path).contains(f)),
-          s"concurrent commit touched files matching the $op predicate " +
-            s"on $root — rerun")
-        val basePaths = m.files.map(_.path).toSet
-        val intruding = cur.files.filter(f => !basePaths(f.path)).filter(candidate)
-        require(intruding.isEmpty,
-          s"concurrent commit added possibly-matching rows during $op " +
-            s"on $root — rerun")
-        Pending(op,
-          cur.files.filterNot(f => affectedPaths(f.path)) ++ retagged ++ newFiles,
-          m.schemaDdl, m.partitionCols, m.bucketSpec, None, cdcFiles)
-      }
-    }
-  }
-
-  /** Merge-on-read UPSERT into a bucketed table — the
-    * `deletionVectors=true` handle path of [[upsert]]: matched target
-    * rows' positions land in ONE deletion vector (hiding them) and
-    * the whole source appends as new bucket files. Write cost
-    * O(|source| + matched rows), never O(bytes of touched buckets) —
-    * the streaming state-table shape, where the copy-on-write upsert
-    * rewrites near the whole table every microbatch (measured ~1 s
-    * per small batch at sf0.1 against ~0.3 s here). DV'd entries keep
-    * their bucket ids, so bucket-grouped reads and SPJ survive;
-    * OPTIMIZE/compaction purges the vectors and the superseded rows.
-    * CDC (CDF handles): hidden rows capture as update_preimage,
-    * matched source rows as update_postimage, unmatched as insert.
-    * Same auto-rebase rule as [[mergeOp]] (touched buckets must be
-    * left alone by racing commits). */
-  private def morUpsertBucketed(source: DataFrame, m: Manifest,
-      txn: Option[(String, Long)], sourceIsPinned: Boolean): Long = {
-    import org.apache.spark.sql.functions.{broadcast, count => fcount, first => ffirst, lit => flit}
-    val spec = m.bucketSpec.get
-    val keys = spec.cols
-    val autoMerge = boolProp(m, TxTable.PropSchemaAutoMerge).getOrElse(false)
-    requireCompatible(StructType.fromDDL(m.schemaDdl), source.schema,
-      allowNew = autoMerge)
-    val bucketed = withBucket(source, spec)
-    val (src, touched0) =
-      if (sourceIsPinned) (bucketed, None)
-      else {
-        val obs = org.apache.spark.sql.Observation()
-        val ckpt = bucketed
-          .observe(obs, org.apache.spark.sql.functions
-            .collect_set(col(BucketCol)).as("touched"))
-          .localCheckpoint(true)
-        (ckpt, Some(obs.get("touched").asInstanceOf[Seq[Int]]
-          .map(_.toString).toSet))
-      }
-    try {
-      val touched: Set[String] = touched0.getOrElse(
-        src.select(col(BucketCol)).distinct()
-          .collect().map(_.getInt(0).toString).toSet)
-      val (affected0, _) = m.files.partition(f =>
-        f.partition.get(BucketCol).exists(touched))
-      val srcKeys = src.select(keys.map(col): _*).distinct()
-      // discovery scan over the touched buckets, position-tagged,
-      // prior-DV rows excluded (the morRewrite discipline) — only
-      // rows whose key the source carries become DV entries
-      val fullCol = "__dv_file"
-      val (matchStats, matching) =
-        if (affected0.isEmpty) (Array.empty[org.apache.spark.sql.Row], null)
-        else {
-          val tagged0 = spark.read.schema(physSchemaOf(m))
-            .parquet(affected0.map(f => new Path(root, f.path).toString): _*)
-            .withColumn(fullCol, col("_metadata.file_path"))
-            .withColumn(DvPathCol, relDataPath)
-            .withColumn(DvPosCol, col("_metadata.row_index"))
-          val taggedPhys = dvPairs(affected0) match {
-            case None     => tagged0
-            case Some(dv) => tagged0.join(broadcast(dv),
-              Seq(DvPathCol, DvPosCol), "left_anti")
-          }
-          val matching = toLogicalDf(taggedPhys, m).join(srcKeys, keys,
-            "left_semi").localCheckpoint(true) // matched-rows-sized
-          (matching.groupBy(col(DvPathCol))
-            .agg(fcount(flit(1)).as("n"), ffirst(col(fullCol)).as("full"))
-            .collect(), matching)
-        }
-      val (retagged, affectedPaths) =
-        if (matchStats.isEmpty) (Nil, Set.empty[String])
-        else {
-          val rawToRel = matchStats.map(r => r.getString(0) ->
-            relativize(new Path(new java.net.URI(r.getAs[String]("full"))))).toMap
-          val freshCounts = matchStats.map(r =>
-            rawToRel(r.getString(0)) -> r.getAs[Long]("n")).toMap
-          val affectedRaw = rawToRel.keySet
-          val paths = rawToRel.values.toSet
-          val affected = m.files.filter(f => paths(f.path))
-          val fresh = matching.select(col(DvPathCol), col(DvPosCol))
-          val dvContent = dvPairs(affected) match {
-            case None        => fresh
-            case Some(prior) => fresh.unionByName(prior)
-          }
-          val (dvEntries, _) = writeDataFiles(dvContent.coalesce(1), Nil,
-            withStats = false, enforce = false)
-          val dvFile = dvEntries match {
-            case Seq(one) => one.path
-            case other => sys.error(s"$root: DV write produced ${other.size} files")
-          }
-          (affected.map(f => f.copy(dvPath = Some(dvFile),
-            dvRows = f.dvRows + freshCounts(f.path))), paths)
-        }
-      // the WHOLE source appends as new bucket files (batch-sized)
-      val (newFiles, outSchema) =
-        writeDataFiles(bucketedWriteFrame(src.drop(BucketCol), spec),
-          Seq(BucketCol))
-      requireCompatible(StructType.fromDDL(m.schemaDdl), outSchema,
-        allowNew = autoMerge)
-      if (autoMerge) requireFreshNamesAddressable(m, outSchema)
-      val ddl = if (autoMerge) mergedDdl(Some(m), outSchema) else m.schemaDdl
-      val cdcFiles: Option[Seq[FileEntry]] =
-        if (!effCdf(m)) None
-        else Some {
-          val pre =
-            if (matching == null) None
-            else Some(matching.drop(fullCol, DvPathCol, DvPosCol, BucketCol)
-              .withColumn(ChangeTypeCol, flit("update_preimage")))
-          val matchedKeys =
-            if (matching == null) None
-            else Some(matching.select(keys.map(col): _*).distinct())
-          val post = readEntries(m, newFiles).drop(BucketCol)
-          val postTagged = matchedKeys match {
-            case None => post.withColumn(ChangeTypeCol, flit("insert"))
-            case Some(mk) =>
-              post.join(mk, keys, "left_semi")
-                .withColumn(ChangeTypeCol, flit("update_postimage"))
-                .unionByName(post.join(mk, keys, "left_anti")
-                  .withColumn(ChangeTypeCol, flit("insert")))
-          }
-          val changes = pre.fold(postTagged)(p =>
-            p.unionByName(postTagged))
-          writeDataFiles(changes, Nil, withStats = false, enforce = false)._1
-        }
-      commit { latest =>
-        val cur = latest.getOrElse(
-          sys.error(s"$root vanished during upsert — rerun"))
-        if (cur.version == m.version)
-          Pending(OpMerge,
-            m.files.filterNot(f => affectedPaths(f.path)) ++ retagged ++ newFiles,
-            ddl, m.partitionCols, m.bucketSpec, txn, cdcFiles)
-        else {
-          require(cur.schemaDdl == m.schemaDdl && cur.bucketSpec == m.bucketSpec,
-            s"concurrent schema/layout change during upsert into $root — rerun")
-          val curByPath = cur.files.map(f => f.path -> f).toMap
-          val affected = m.files.filter(f => affectedPaths(f.path))
-          require(affected.forall(f => curByPath.get(f.path).contains(f)),
-            s"concurrent commit touched upserted buckets of $root — rerun")
-          val basePaths = m.files.map(_.path).toSet
-          val intruding = cur.files.exists(f => !basePaths(f.path) &&
-            f.partition.get(BucketCol).exists(touched))
-          require(!intruding,
-            s"concurrent commit added rows to upserted buckets of $root — rerun")
-          Pending(OpMerge,
-            cur.files.filterNot(f => affectedPaths(f.path)) ++ retagged ++ newFiles,
-            ddl, m.partitionCols, m.bucketSpec, txn, cdcFiles)
-        }
-      }
-    } finally { if (!sourceIsPinned) { src.unpersist(); () } }
-  }
+    * CDC delete records in the commit delta. Racing commits follow
+    * [[commitRowLevel]]. */
+  def deleteWhere(cond: Column): Long = whereRows(OpDelete, cond)
 
   /** Row-level UPDATE by predicate — `UPDATE t SET col = expr, ...
-    * WHERE cond`, copy-on-write exactly like [[deleteWhere]] (same
-    * planning, same CDC capture as update_preimage/update_postimage
-    * pairs, same auto-rebase). Every SET expression is evaluated
-    * against the PRE-update row (simultaneous assignment, the SQL
-    * rule), type changes are refused. Updating a hive-partition or
-    * bucket-key column is allowed and relocates the row: rewritten
-    * files re-shadow partition dirs from the new data values and the
-    * bucket recomputes from the new key, so the layout invariants
-    * hold by construction. */
+    * WHERE cond`, planned exactly like [[deleteWhere]], with CDC
+    * update_preimage/update_postimage pairs. Every SET expression is
+    * evaluated against the PRE-update row (simultaneous assignment,
+    * the SQL rule), type changes are refused. Updating a
+    * hive-partition or bucket-key column is allowed and relocates the
+    * row: new files re-shadow partition dirs from the new data values
+    * and the bucket recomputes from the new key, so the layout
+    * invariants hold by construction. Through a `deletionVectors`
+    * handle the pre-update rows are hidden by the vector and the
+    * replacements append as new files — write cost O(matching rows),
+    * data files byte-identical. */
   def updateWhere(cond: Column, set: Map[String, Column]): Long = {
     require(set.nonEmpty, "updateWhere needs at least one SET column")
-    if (latestVersion.map(v => effDv(manifest(v))).getOrElse(deletionVectors))
-      return updateWhereMoR(cond, set)
-    rewriteWhere(OpUpdate, cond) { matching =>
+    whereRows(OpUpdate, cond, set = Some { matching =>
       val fields = matching.schema.fieldNames
       val resolved = set.map { case (k, v) =>
         fields.find(_.equalsIgnoreCase(k)).getOrElse(
@@ -2581,14 +1919,10 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
       // one select = simultaneous assignment: every RHS sees the
       // original row, regardless of SET order
       matching.select(fields.map(n =>
-        resolved.getOrElse(n, matching.col(s"`$n`")).as(n)): _*)
-    }
+        resolved.getOrElse(n, matching.col(s"`$n`")).as(n)).toIndexedSeq: _*)
+    })
   }
 
-  /** Shared copy-on-write core of [[deleteWhere]]/[[updateWhere]]:
-    * `replaceMatching` maps the matching rows of the affected files
-    * to their replacement (empty for delete, reassigned for update);
-    * non-matching rows of those files are kept verbatim. */
   /** Selective overwrite (the Delta `replaceWhere`): atomically
     * delete every row matching `cond` and insert `source` — one
     * commit, so readers never see the in-between state. Every
@@ -2596,8 +1930,8 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     * rule: otherwise "replace partition X" could silently write into
     * partition Y); subset-schema sources null-fill like append. The
     * planning, zone-map candidate pruning, CDC capture (delete +
-    * insert images), and auto-rebase all come from the shared
-    * predicate-rewrite core. */
+    * insert images), and auto-rebase are [[deleteWhere]]'s, always
+    * copy-on-write. */
   def replaceWhere(source: DataFrame, cond: Column): Long = {
     import org.apache.spark.sql.functions.{coalesce, lit => flit, not}
     // pin ONE evaluation (the merge discipline): the source feeds the
@@ -2611,92 +1945,404 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
       require(offending == 0,
         s"$root: every replaceWhere source row must satisfy the " +
           "predicate — found rows outside it (write them with append)")
-      rewriteWhere(OpReplace, cond, Some(pinned))(matching => matching.limit(0))
+      whereRows(OpReplace, cond, insert = Some(pinned))
     } finally { pinned.unpersist(); () }
   }
 
-  private def rewriteWhere(op: String, cond: Column,
-      insert: Option[DataFrame] = None)(
-      replaceMatching: DataFrame => DataFrame): Long = {
-    import org.apache.spark.sql.functions.{coalesce, input_file_name, lit => flit, not}
-    val v = latestVersion.getOrElse(
-      sys.error(s"$root has no committed snapshots"))
-    val m = manifest(v)
+  // ---- the row-level write core -------------------------------------------
+  // Every row-level verb above and every native seam commit below is one
+  // pass through four steps, each defined once here:
+  //   plan     [[planAffected]]: a candidate test on manifest entries
+  //            (touched buckets, zone maps and Blooms, or all files),
+  //            then at most one discovery scan, gives the affected entries;
+  //   apply    copy-on-write ([[writeLayout]] lands the affected files'
+  //            survivors plus the new rows) or deletion vector
+  //            ([[foldDv]] hides rows and re-tags the affected entries);
+  //   capture  [[captureChanges]] lands the change-data-feed images;
+  //   commit   [[commitRowLevel]], the one rebase rule.
+  // A verb only describes its scope (the candidate test), its matcher
+  // (which rows of the candidates it is about) and its action.
+
+  /** The merge family (merge, upsert, mergeClauses, deleteKeys). The
+    * source is pinned and scopes the write ([[pinSource]]): a bucketed
+    * table affects every file of the buckets the source touches; any
+    * other layout affects only the candidates ONE discovery semi-join
+    * finds holding source keys; `touchAll` (WHEN NOT MATCHED BY SOURCE:
+    * every target row participates) affects the whole table, the
+    * documented price of a by-source clause, exactly Delta's.
+    *
+    * `resolve` maps (affected rows, source rows) to the affected files'
+    * new contents, rewritten copy-on-write; the change feed diffs the
+    * files read against the files written ([[cowChanges]]). `None`
+    * upserts by deletion vector instead: the positions of target rows
+    * whose key the source carries fold into the vector and the whole
+    * source appends as new files; CDC records the hidden rows as
+    * update_preimage and the source rows as update_postimage or insert.
+    * DV'd entries keep their bucket ids, so bucket-grouped reads and
+    * SPJ survive; compaction purges the vectors.
+    *
+    * Schema evolution (the reference's `schema.autoMerge.enabled`,
+    * `resources/spark.py:68-69`, as the `schemaAutoMerge` table
+    * property): a source with NEW columns widens the table schema at
+    * commit; files the merge left alone lack the column and
+    * null-backfill on read. Off = a strict refusal. */
+  private def mergeRows(op: String, source: DataFrame, keys: Seq[String],
+      txn: Option[(String, Long)], sourceIsPinned: Boolean = false,
+      checkSourceSchema: Boolean = true, touchAll: Boolean = false)(
+      resolve: Option[(DataFrame, DataFrame) => DataFrame]): Long = {
+    val m = manifest(latestVersion.getOrElse(
+      sys.error(s"$root: merge needs an existing table")))
     val schema = StructType.fromDDL(m.schemaDdl)
-    val hit = coalesce(cond, flit(false)) // NULL predicate keeps the row
-    val candidate = candidateFilter(schema,
-      analyzedPredicate(schema, cond).toSeq, physNameOf(m, _))
-    val candidates = m.files.filter(candidate)
-    val srcCol = "__src_file"
-    val affectedPaths: Set[String] =
-      if (candidates.isEmpty) Set.empty
-      else readEntriesTagged(m, candidates, Some(srcCol)).where(hit)
-        .select(col(srcCol)).distinct().collect()
-        .map(r => relativize(new Path(new java.net.URI(r.getString(0))))).toSet
-    // zero matches: no commit at all — unless an insert side makes
-    // this a replaceWhere, which must still land its rows
-    if (affectedPaths.isEmpty && insert.isEmpty) return v
-    insert.foreach { i =>
-      requireCompatible(schema, i.schema, allowNew = false) }
-    val (affected, untouched) = m.files.partition(f => affectedPaths(f.path))
-    val existing = readEntries(m, affected)
-    val matching = existing.where(hit)
-    val replaced = replaceMatching(matching)
-    requireCompatible(schema, replaced.schema, allowNew = false)
-    val replacedNames = replaced.schema.fieldNames.toSet
-    val droppedCols = schema.fieldNames.filterNot(n =>
-      n == BucketCol || replacedNames.contains(n))
-    require(droppedCols.isEmpty,
-      s"$op dropped column(s) ${droppedCols.mkString(", ")} — " +
-        "rewritten rows must keep every table column")
-    val newRows = insert.foldLeft(
-      existing.where(not(hit)).unionByName(replaced))(
-      (acc, i) => acc.unionByName(i, allowMissingColumns = true))
-    val spec = m.bucketSpec
-    val data = spec.map(bucketedWriteFrame(newRows, _)).getOrElse(newRows)
-    val (files, _) = writeDataFiles(data, m.partitionCols)
-    // CDC: deterministic re-reads of immutable parquet — the captured
-    // rows are exactly what the rewrite dropped/replaced
-    val cdcFiles: Option[Seq[FileEntry]] =
-      if (!effCdf(m)) None
-      else Some {
-        val base =
-          if (op == OpUpdate) matching.withColumn(ChangeTypeCol,
-              flit("update_preimage"))
-            .unionByName(
-              replaced.withColumn(ChangeTypeCol, flit("update_postimage")))
-          else matching.withColumn(ChangeTypeCol, flit("delete"))
-        val changes = insert.foldLeft(base)((acc, i) =>
-          acc.unionByName(i.withColumn(ChangeTypeCol, flit("insert")),
-            allowMissingColumns = true))
-        writeDataFiles(changes, Nil, withStats = false, enforce = false)._1
+    val autoMerge = boolProp(m, TxTable.PropSchemaAutoMerge).getOrElse(false)
+    // clause merges ([[mergeClauses]]) feed a source whose payload
+    // columns are deliberately NOT table columns (prefixed namespace);
+    // their key columns carry the table names, which is all planning needs
+    if (checkSourceSchema)
+      requireCompatible(schema, source.schema, allowNew = autoMerge)
+    val keyNames = m.bucketSpec.fold(keys.map(k => schema.fields
+      .find(_.name.equalsIgnoreCase(k))
+      .getOrElse(sys.error(s"$root has no merge key column $k")).name))(_.cols)
+    val (src, candidate) = pinSource(m, source, keyNames, sourceIsPinned, touchAll)
+    try {
+      val srcKeys = src.select(keyNames.map(k => col(s"`$k`")): _*).distinct()
+      def holdingSourceKeys(rows: DataFrame) = rows.join(srcKeys, keyNames, "left_semi")
+      val (affected, added, cdc, out) = resolve match {
+        case Some(f) =>
+          val plan = planAffected(m, candidate,
+            if (m.bucketSpec.isDefined || touchAll) None else Some(holdingSourceKeys))
+          val existing = readEntries(m, plan.entries)
+          val resolved = f(existing, src.drop(BucketCol))
+          requireRowSchema(op, m, resolved.schema, allowNew = autoMerge)
+          val files = writeLayout(m, resolved)
+          (plan.entries, files, captureChanges(m)(
+            cowChanges(existing, readEntries(m, files), keyNames)), resolved.schema)
+        case None =>
+          // the matched rows are materialized once (matched-rows-sized):
+          // they feed the vector, its bookkeeping and the change feed
+          val plan = planAffected(m, candidate,
+            Some(holdingSourceKeys(_).localCheckpoint(true)), positional = true)
+          val retagged = plan.pairs.fold(Seq.empty[FileEntry])(foldDv(m, _, plan.counts))
+          val appended = src.drop(BucketCol)
+          requireRowSchema(op, m, appended.schema, allowNew = autoMerge,
+            replacing = false)
+          val files = writeLayout(m, appended)
+          val post = readEntries(m, files)
+          (plan.entries, retagged ++ files, captureChanges(m)(plan.rows match {
+            case None => Seq(changeImages(post, "insert"))
+            case Some(pre) => changeImages(pre, "update_preimage") +:
+              byKey(post, pre, keyNames, "update_postimage", "insert")
+          }), appended.schema)
       }
+      commitRowLevel(op, m, affected, added, Some(candidate), cdc,
+        if (autoMerge) mergedDdl(Some(m), out) else m.schemaDdl, txn)
+    } finally { if (!sourceIsPinned) { src.unpersist(); () } }
+  }
+
+  /** Pin a merge source to ONE evaluation (localCheckpoint, the
+    * probeSignatureIndex discipline) and derive the write's candidate
+    * test from it: the source feeds the candidate test, the discovery
+    * and the apply step, and a non-deterministic source re-evaluated
+    * between them could hash a key into a bucket the plan never read,
+    * silently breaking replace-by-key. `sourceIsPinned` callers
+    * (foreachBatch microbatches: materialized, offset-pinned,
+    * deterministic by the replay contract) skip the checkpoint — one
+    * fewer full write of the batch per commit.
+    *
+    * Bucketed: the candidates are the files of the buckets the source
+    * touches, a set bounded by nBuckets. It rides the checkpoint job as
+    * an observed metric (a pinned source pays one distinct collect), so
+    * ONE driver-side job precedes the write, not two; the returned
+    * source carries the bucket column. Other layouts: [[keyCandidate]]. */
+  private def pinSource(m: Manifest, source: DataFrame, keys: Seq[String],
+      sourceIsPinned: Boolean, touchAll: Boolean)
+      : (DataFrame, FileEntry => Boolean) = m.bucketSpec match {
+    case Some(spec) =>
+      val bucketed = withBucket(source, spec)
+      val (src, observed) =
+        if (sourceIsPinned) (bucketed, None)
+        else {
+          val obs = org.apache.spark.sql.Observation()
+          val ckpt = bucketed
+            .observe(obs, org.apache.spark.sql.functions
+              .collect_set(col(BucketCol)).as("touched"))
+            .localCheckpoint(true)
+          (ckpt, Some(obs.get("touched").asInstanceOf[Seq[Int]]))
+        }
+      val touched: Set[String] =
+        if (touchAll) (0 until spec.n).map(_.toString).toSet
+        else observed.getOrElse(src.select(col(BucketCol)).distinct()
+          .collect().map(_.getInt(0)).toSeq).map(_.toString).toSet
+      (src, f => f.partition.get(BucketCol).exists(touched))
+    case None =>
+      val src = if (sourceIsPinned) source else source.localCheckpoint(true)
+      (src, if (touchAll) _ => true else keyCandidate(m, src, keys))
+  }
+
+  /** Candidate test of a key-planned merge into a flat or
+    * hive-partitioned table: ONE bounded aggregation over the pinned
+    * source collects, per key column, min/max and an approximate
+    * distinct count; small key sets re-collect exactly and become
+    * IN-list constraints (which probe per-file Bloom filters), larger
+    * ones degrade to [min,max] zone-map ranges. Files failing it
+    * provably hold no source key. */
+  private def keyCandidate(m: Manifest, src: DataFrame, keys: Seq[String])
+      : FileEntry => Boolean = {
+    import org.apache.spark.sql.catalyst.expressions.{
+      AttributeReference, GreaterThanOrEqual, In, LessThanOrEqual, Literal}
+    import org.apache.spark.sql.functions.{
+      approx_count_distinct, max => fmax, min => fmin}
+    val schema = StructType.fromDDL(m.schemaDdl)
+    val keyFields = keys.map(schema(_))
+    val aggs = keyFields.flatMap { f => Seq(
+      fmin(col(s"`${f.name}`")).as(s"mn_${f.name}"),
+      fmax(col(s"`${f.name}`")).as(s"mx_${f.name}"),
+      approx_count_distinct(col(s"`${f.name}`")).as(s"nd_${f.name}")) }
+    val row = src.agg(aggs.head, aggs.tail: _*).head()
+    // a key whose source values are ALL null (or an empty source)
+    // matches nothing — no file is a candidate, the merge reduces to
+    // its pure-insert branch
+    if (keyFields.exists(f => row.getAs[Any](s"mn_${f.name}") == null))
+      return _ => false
+    val preds = keyFields.flatMap { f =>
+      val attr = AttributeReference(f.name, f.dataType)()
+      val smallSet: Option[Seq[Any]] =
+        if (row.getAs[Long](s"nd_${f.name}") > TxTable.MergeInListCap) None
+        else {
+          val vs = src.select(col(s"`${f.name}`"))
+            .where(col(s"`${f.name}`").isNotNull).distinct()
+            .limit(TxTable.MergeInListCap + 1)
+            .collect().map(_.get(0)).toSeq
+          if (vs.size > TxTable.MergeInListCap) None else Some(vs)
+        }
+      smallSet match {
+        case Some(vs) =>
+          Seq(In(attr, vs.map(x => Literal.create(x, f.dataType))))
+        case None => Seq(
+          GreaterThanOrEqual(attr,
+            Literal.create(row.getAs[Any](s"mn_${f.name}"), f.dataType)),
+          LessThanOrEqual(attr,
+            Literal.create(row.getAs[Any](s"mx_${f.name}"), f.dataType)))
+      }
+    }
+    candidateFilter(schema, preds, physNameOf(m, _))
+  }
+
+  /** The predicate family (deleteWhere, updateWhere, replaceWhere): the
+    * zone-map candidate test of `cond` ([[candidateFilter]]) plus one
+    * discovery scan find the files holding matching rows. `set` maps
+    * the matching rows to their replacements (None: they are deleted);
+    * `insert` adds rows (replaceWhere). On a deletion-vector table
+    * (and without an insert side) the matching rows' positions fold
+    * into the vector and replacements append as new files with the
+    * layout recomputed from their new values, otherwise the affected
+    * files' survivors, replacements and inserts are rewritten
+    * copy-on-write. The change feed records the matching rows (delete
+    * or update_preimage), the replacements (update_postimage, read back
+    * from the written files under a vector) and the inserts. Zero
+    * matches commit nothing — unless an insert side must still land
+    * its rows. */
+  private def whereRows(op: String, cond: Column,
+      set: Option[DataFrame => DataFrame] = None,
+      insert: Option[DataFrame] = None): Long = {
+    import org.apache.spark.sql.functions.{coalesce, lit => flit, not}
+    val m = manifest(latestVersion.getOrElse(
+      sys.error(s"$root has no committed snapshots")))
+    val hit = coalesce(cond, flit(false)) // NULL predicate keeps the row
+    val candidate = predicateCandidate(m, cond)
+    val vector = insert.isEmpty && effDv(m)
+    val plan = planAffected(m, candidate, Some(_.where(hit)), positional = vector)
+    if (plan.entries.isEmpty && insert.isEmpty) return m.version
+    insert.foreach { i =>
+      requireCompatible(StructType.fromDDL(m.schemaDdl), i.schema, allowNew = false) }
+    val existing = if (vector) None else Some(readEntries(m, plan.entries))
+    val matching = existing.fold(plan.rows.get)(_.where(hit))
+    val retagged =
+      if (vector) foldDv(m, plan.pairs.get, plan.counts) else Seq.empty[FileEntry]
+    val replaced = set.map(_(matching))
+    replaced.foreach(r => requireRowSchema(op, m, r.schema, allowNew = false))
+    val files = existing match {
+      case Some(e) => writeLayout(m, (replaced ++ insert).foldLeft(e.where(not(hit)))(
+        _.unionByName(_, allowMissingColumns = true)))
+      case None => replaced.fold(Seq.empty[FileEntry])(writeLayout(m, _, route = false))
+    }
+    val cdc = captureChanges(m)(replaced.fold(Seq(changeImages(matching, "delete"))) {
+      r => Seq(changeImages(matching, "update_preimage"), changeImages(
+        if (vector) readEntries(m, files) else r, "update_postimage"))
+    } ++ insert.map(changeImages(_, "insert")))
+    commitRowLevel(op, m, plan.entries, retagged ++ files, Some(candidate), cdc,
+      m.schemaDdl)
+  }
+
+  /** The zone-map/Bloom candidate test of predicate `cond` on snapshot `m`. */
+  private def predicateCandidate(m: Manifest, cond: Column): FileEntry => Boolean = {
+    val schema = StructType.fromDDL(m.schemaDdl)
+    candidateFilter(schema, analyzedPredicate(schema, cond).toSeq, physNameOf(m, _))
+  }
+
+  /** plan: `candidate` keeps the manifest entries that could hold
+    * affected rows; `matcher` (None: every candidate is affected and
+    * nothing is scanned) selects the matching rows of ONE tagged
+    * discovery scan over the candidates, and the files holding them
+    * become the affected entries (parquet row-group pushdown serves the
+    * scan). `positional` tags rows with their (file, position), what a
+    * deletion vector records; rows an entry's existing vector already
+    * hides never match, so re-deleting is a no-op and vectors never
+    * hold duplicates. */
+  private def planAffected(m: Manifest, candidate: FileEntry => Boolean,
+      matcher: Option[DataFrame => DataFrame],
+      positional: Boolean = false): Affected = {
+    import org.apache.spark.sql.functions.{count => fcount, lit => flit}
+    val candidates = m.files.filter(candidate)
+    matcher match {
+      case None => Affected(candidates, None, None, Map.empty)
+      case Some(_) if candidates.isEmpty => Affected(Nil, None, None, Map.empty)
+      case Some(select) =>
+        val matching = select(readEntries(m, candidates, tagged = true,
+          positional = positional))
+        // per-file match counts: the affected set and a vector's dvRows
+        // bookkeeping in one driver action, ≤ one row per candidate.
+        // The tag is the full metadata path — a vector's key is the raw
+        // (possibly URI-encoded) extraction while manifest entries hold
+        // decoded paths, so the driver maps between the two through URI
+        // parsing, never by re-encoding
+        val counts = matching.groupBy(col(SrcFileCol)).agg(fcount(flit(1)))
+          .collect().map(r => relativize(new Path(new java.net.URI(
+            r.getString(0)))) -> r.getLong(1)).toMap
+        def keep(df: => DataFrame) = if (positional) Some(df) else None
+        Affected(m.files.filter(f => counts.contains(f.path)),
+          keep(matching.drop(SrcFileCol, DvPathCol, DvPosCol)),
+          keep(matching.select(col(DvPathCol), col(DvPosCol))), counts)
+    }
+  }
+
+  /** apply, copy-on-write: land `rows` in the table's own layout
+    * (bucket-routed or hive-partitioned). `route = false` computes the
+    * bucket id without the routing exchange — for a few appended rows. */
+  private def writeLayout(m: Manifest, rows: DataFrame,
+      route: Boolean = true): Seq[FileEntry] = {
+    val data = m.bucketSpec.fold(rows)(spec =>
+      if (route) bucketedWriteFrame(rows, spec) else withBucket(rows, spec))
+    writeDataFiles(data, m.partitionCols)._1
+  }
+
+  /** Schema guard for the rows a row-level write lands: no column is
+    * retyped, new ones appear only under schema evolution (`allowNew`),
+    * and rows that REPLACE existing ones keep every table column — a
+    * resolver emitting a subset would otherwise commit the old schema
+    * and silently null-backfill the rewritten files on read. */
+  private def requireRowSchema(op: String, m: Manifest, out: StructType,
+      allowNew: Boolean, replacing: Boolean = true): Unit = {
+    val schema = StructType.fromDDL(m.schemaDdl)
+    requireCompatible(schema, out, allowNew)
+    if (allowNew) requireFreshNamesAddressable(m, out)
+    val names = out.fieldNames.toSet
+    val dropped = schema.fieldNames
+      .filterNot(n => n == BucketCol || names.contains(n))
+    require(!replacing || dropped.isEmpty,
+      s"$op dropped column(s) ${dropped.mkString(", ")} — " +
+        "rewritten rows must keep every table column")
+  }
+
+  /** apply, deletion vector: fold the `fresh` (file, position) pairs
+    * with the PRIOR vectors of the entries they hit into ONE sidecar
+    * (one vector per entry — later deletes replace, never chain;
+    * [[dvPairs]] scopes each entry to the sidecar it pins) and re-tag
+    * those entries; prior rows of entries not hit stay served by their
+    * old sidecar, live while any entry references it. `counts`: fresh
+    * pairs per entry path (empty: nothing to fold). One file: a vector
+    * is deleted-row-sized metadata, not data. */
+  private def foldDv(m: Manifest, fresh: => DataFrame,
+      counts: Map[String, Long]): Seq[FileEntry] = {
+    val affected = m.files.filter(f => counts.contains(f.path))
+    if (affected.isEmpty) return Nil
+    val content = dvPairs(affected).fold(fresh)(fresh.unionByName(_))
+    val dvFile = writeDataFiles(content.coalesce(1), Nil,
+      withStats = false, enforce = false)._1 match {
+      case Seq(one) => one.path
+      case other    => sys.error(s"$root: DV write produced ${other.size} files")
+    }
+    affected.map(f => f.copy(dvPath = Some(dvFile),
+      dvRows = f.dvRows + counts(f.path)))
+  }
+
+  /** capture: land the change-data-feed `images` of one commit as
+    * out-of-line CDC files — None (nothing evaluated) when the table
+    * keeps no feed, `Some(Nil)` for a feed commit without images. */
+  private def captureChanges(m: Manifest)(images: => Seq[DataFrame])
+      : Option[Seq[FileEntry]] =
+    if (!effCdf(m)) None
+    else Some(images.reduceOption(_.unionByName(_, allowMissingColumns = true))
+      .fold(Seq.empty[FileEntry])(changes =>
+        writeDataFiles(changes, Nil, withStats = false, enforce = false)._1))
+
+  /** `rows` as change records of kind `kind`. */
+  private def changeImages(rows: DataFrame, kind: String): DataFrame =
+    rows.drop(BucketCol).withColumn(ChangeTypeCol,
+      org.apache.spark.sql.functions.lit(kind))
+
+  /** Change records of a copy-on-write rewrite: the affected files'
+    * rows `before` and `after` are diffed — rows the rewrite left
+    * byte-identical produce NO change rows — and classified by key: a
+    * key on both sides is an update pre/post image pair, otherwise a
+    * delete or an insert. Each diff is materialized ONCE (change-sized):
+    * the four branches would otherwise each re-evaluate an exceptAll
+    * subtree and re-read the affected files (measured 6.1 s vs 1.0 s
+    * stats-off for a CDF merge commit at sf0.1 before the checkpoint). */
+  private def cowChanges(before: DataFrame, after: DataFrame,
+      keys: Seq[String]): Seq[DataFrame] = {
+    val del = before.exceptAll(after).localCheckpoint(true)
+    val ins = after.exceptAll(before).localCheckpoint(true)
+    byKey(del, ins, keys, "update_preimage", "delete") ++
+      byKey(ins, del, keys, "update_postimage", "insert")
+  }
+
+  /** `rows` as change records: of kind `hit` where their key occurs in
+    * `other`, of kind `miss` elsewhere. */
+  private def byKey(rows: DataFrame, other: DataFrame, keys: Seq[String],
+      hit: String, miss: String): Seq[DataFrame] = {
+    val otherKeys = other.select(keys.map(col): _*).distinct()
+    Seq(changeImages(rows.join(otherKeys, keys, "left_semi"), hit),
+      changeImages(rows.join(otherKeys, keys, "left_anti"), miss))
+  }
+
+  /** commit: publish `added` in place of the `affected` entries of base
+    * snapshot `m`. The one rebase rule (optimistic concurrency with
+    * logical conflict detection — Delta's single conflict checker for
+    * every row-level operation, which checks the files each operation
+    * read): a racing commit is harmless iff it kept the schema and
+    * layout, left every affected ENTRY unchanged — path AND deletion
+    * vector, since a racing vector delete keeps the path but hides rows
+    * the stale read still holds — and added no file passing `candidate`
+    * (a serial execution would have read it). Then the result is what a
+    * serial execution would produce: recompose against the new
+    * snapshot, keeping what the racing commit changed elsewhere, and
+    * publish. Anything else fails with "rerun", which re-plans against
+    * the new snapshot. Without a candidate test (the native seam,
+    * whose matched set is Spark's — there is nothing to replay a
+    * rebase check against) any racing commit conflicts. */
+  private def commitRowLevel(op: String, m: Manifest,
+      affected: Seq[FileEntry], added: Seq[FileEntry],
+      candidate: Option[FileEntry => Boolean], cdc: Option[Seq[FileEntry]],
+      schemaDdl: String, txn: Option[(String, Long)] = None): Long = {
+    val gone = affected.map(_.path).toSet
     commit { latest =>
       val cur = latest.getOrElse(sys.error(s"$root vanished during $op — rerun"))
-      if (cur.version == m.version)
-        Pending(op, untouched ++ files, m.schemaDdl, m.partitionCols, spec,
-          None, cdcFiles)
-      else {
-        // auto-rebase (the merge discipline, predicate flavor): the
-        // racing commit is harmless iff our rewritten files survived
-        // untouched AND nothing it added could match the predicate —
-        // proven by the same zone-map candidate test that planned the
-        // rewrite (a predicate with no extractable constraints
-        // conservatively conflicts with ANY added file)
-        require(cur.schemaDdl == m.schemaDdl && cur.bucketSpec == spec &&
+      if (cur.version != m.version) {
+        require(candidate.isDefined,
+          s"concurrent commit during native row-level $op on $root — rerun")
+        require(cur.schemaDdl == m.schemaDdl && cur.bucketSpec == m.bucketSpec &&
             cur.partitionCols == m.partitionCols,
           s"concurrent schema/layout change during $op on $root — rerun")
-        require(affectedPaths.subsetOf(cur.files.map(_.path).toSet),
-          s"concurrent commit rewrote files matching the $op predicate " +
-            s"on $root — rerun")
+        val curByPath = cur.files.map(f => f.path -> f).toMap
+        require(affected.forall(f => curByPath.get(f.path).contains(f)),
+          s"concurrent commit changed files read by $op on $root — rerun")
         val basePaths = m.files.map(_.path).toSet
-        val intruding = cur.files.filter(f => !basePaths(f.path)).filter(candidate)
-        require(intruding.isEmpty,
+        require(!cur.files.exists(f => !basePaths(f.path) && candidate.get(f)),
           s"concurrent commit added possibly-matching rows during $op " +
             s"on $root — rerun")
-        Pending(op, cur.files.filterNot(f => affectedPaths(f.path)) ++ files,
-          m.schemaDdl, m.partitionCols, spec, None, cdcFiles)
       }
+      Pending(op, cur.files.filterNot(f => gone(f.path)) ++ added, schemaDdl,
+        m.partitionCols, m.bucketSpec, txn, cdc)
     }
   }
 
@@ -2722,7 +2368,7 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     * literal. Bounds are statCmp-space strings; anything unextractable
     * simply contributes no constraint, so pruning degrades to keeping
     * files, never to dropping rows. Strict bounds prune as non-strict
-    * — sound, marginally weaker. Shared by [[rewriteWhere]]'s planning
+    * — sound, marginally weaker. Shared by the row-level writes' planning
     * + auto-rebase test and the scan-time file skipping of the
     * txtable read relation. */
   private[graft] def candidateFilter(schema: StructType,
@@ -5012,9 +4658,9 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
   }
 
   /** Publish one NATIVE row-level operation (`WriteDelta`) as a
-    * single commit: the task-written deletion-vector fragments fold —
-    * together with the affected files' PRIOR vectors — into one DV
-    * side-file (the [[deleteWhere]] merge-on-read discipline,
+    * single commit through the row-level write core: the task-written
+    * deletion-vector fragments fold — together with the affected
+    * files' PRIOR vectors — into one DV side-file ([[foldDv]],
     * O(changed rows) always), the task-written data files become
     * manifest entries with full zone-map stats, CHECK / NOT NULL
     * invariants re-validate over exactly the new rows, and CDF
@@ -5024,11 +4670,9 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     * ([[entriesOfDir]]'s `only` filter).
     *
     * Concurrency: strict first-writer-wins against the scanned base
-    * version — unlike the seam's predicate DML, the native plan's
-    * matched set is Spark's, so there is no predicate to replay a
-    * rebase check against; any racing commit conflicts. DV keys are
-    * manifest entry paths (agreeing with the raw `_metadata` extraction
-    * for un-encoded paths, the same assumption [[morRewrite]] makes). */
+    * version ([[commitRowLevel]] without a candidate test). DV keys are
+    * manifest entry paths (agreeing with the raw `_metadata`
+    * extraction for un-encoded paths). */
   private[graft] def commitDeltaNative(ctx: TxTable.DeltaWriteContext,
       op: String, insertFiles: Seq[String], updateFiles: Seq[String],
       deleteFrags: Seq[String], updateFrags: Seq[String]): Long = {
@@ -5044,93 +4688,45 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     def readFrags(ps: Seq[String]): DataFrame =
       spark.read.schema(TxTable.dvFragSchema)
         .parquet(ps.map(p => new Path(root, p).toString): _*)
-
-    // -- fold fresh deletions into ONE deletion vector ----------------------
-    val (retaggedPaths, retagged, dvEntryFiles) =
-      if (frags.isEmpty) (Set.empty[String], Nil, Nil)
-      else {
-        val fresh = readFrags(frags)
-        val counts = fresh.groupBy(col(DvPathCol))
-          .agg(fcount(flit(1)).as("n")).collect()
-        val freshCounts = counts.map(r =>
-          r.getString(0) -> r.getAs[Long]("n")).toMap
-        val byPath = m.files.map(f => f.path -> f).toMap
-        freshCounts.keys.foreach(p => require(byPath.contains(p),
-          s"$root: native $op references unknown data file $p"))
-        val affected = m.files.filter(f => freshCounts.contains(f.path))
-        val dvContent = dvPairs(affected) match {
-          case None        => fresh
-          case Some(prior) => fresh.unionByName(prior)
-        }
-        val (dvEntries, _) = writeDataFiles(dvContent.coalesce(1), Nil,
-          withStats = false, enforce = false)
-        val dvFile = dvEntries match {
-          case Seq(one) => one.path
-          case other => sys.error(s"$root: DV write produced ${other.size} files")
-        }
-        (freshCounts.keySet,
-          affected.map(f => f.copy(dvPath = Some(dvFile),
-            dvRows = f.dvRows + freshCounts(f.path))),
-          dvEntries)
-      }
-    val _ = dvEntryFiles // referenced by the committed retagged entries
-
-    // -- new data files → manifest entries with stats ------------------------
-    val writeDst = new Path(dataDir, s"w-${ctx.writeId}")
-    val newEntries =
-      if (newPaths.isEmpty) Nil
-      else entriesOfDir(writeDst, ctx.physWriteSchema, withStats = true,
-        only = Some(newPaths.toSet))
-    require(newEntries.map(_.path).toSet == newPaths.toSet,
-      s"$root: native $op task-committed files missing on disk — " +
-        s"expected ${newPaths.size}, found ${newEntries.size}")
-
-    // -- invariant re-validation over exactly the new rows -------------------
+    val counts: Map[String, Long] =
+      if (frags.isEmpty) Map.empty
+      else readFrags(frags).groupBy(col(DvPathCol)).agg(fcount(flit(1)))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val known = m.files.map(_.path).toSet
+    counts.keys.foreach(p => require(known(p),
+      s"$root: native $op references unknown data file $p"))
+    val retagged = foldDv(m, readFrags(frags), counts)
+    val newEntries = nativeEntries(ctx, newPaths)
     validateNewRows(m, newEntries)
-
-    // -- CDF capture ----------------------------------------------------------
-    val cdcFiles: Option[Seq[FileEntry]] =
-      if (!effCdf(m)) None
-      else Some {
-        def preimages(fragPs: Seq[String], tag: String): Option[DataFrame] =
-          if (fragPs.isEmpty) None
-          else {
-            val fr = readFrags(fragPs)
-            val touched = fr.select(col(DvPathCol)).distinct()
-              .collect().map(_.getString(0)) // ≤ affected file count
-            val tagged = spark.read.schema(physSchemaOf(m))
-              .parquet(touched.map(p => new Path(root, p).toString): _*)
-              .withColumn(DvPathCol, relDataPath)
-              .withColumn(DvPosCol, col("_metadata.row_index"))
-            val hit = tagged.join(fr, Seq(DvPathCol, DvPosCol), "left_semi")
-              .drop(DvPathCol, DvPosCol)
-            Some(toLogicalDf(hit, m).drop(BucketCol)
-              .withColumn(ChangeTypeCol, flit(tag)))
-          }
-        def images(es: Seq[FileEntry], tag: String): Option[DataFrame] =
-          if (es.isEmpty) None
-          else Some(readEntries(m, es).drop(BucketCol)
-            .withColumn(ChangeTypeCol, flit(tag)))
-        val newByPath = newEntries.map(e => e.path -> e).toMap
-        val parts = Seq(
-          preimages(deleteFrags, "delete"),
-          preimages(updateFrags, "update_preimage"),
-          images(updateFiles.flatMap(newByPath.get), "update_postimage"),
-          images(insertFiles.flatMap(newByPath.get), "insert")).flatten
-        if (parts.isEmpty) Nil
-        else writeDataFiles(parts.reduce(_.unionByName(_)), Nil,
-          withStats = false, enforce = false)._1
+    // the images of the rows the fragments hide, re-read by position —
+    // a plain scan: fragment positions are live rows, so the files'
+    // prior vectors need no anti-join
+    def preimages(fragPs: Seq[String], kind: String): Option[DataFrame] =
+      if (fragPs.isEmpty) None
+      else {
+        val fr = readFrags(fragPs)
+        val touched = fr.select(col(DvPathCol)).distinct()
+          .collect().map(_.getString(0)) // ≤ affected file count
+        val hit = spark.read.schema(physSchemaOf(m))
+          .parquet(touched.map(p => new Path(root, p).toString): _*)
+          .withColumn(DvPathCol, relDataPath)
+          .withColumn(DvPosCol, col("_metadata.row_index"))
+          .join(fr, Seq(DvPathCol, DvPosCol), "left_semi")
+          .drop(DvPathCol, DvPosCol)
+        Some(changeImages(toLogicalDf(hit, m), kind))
       }
-
-    val untouched = m.files.filterNot(f => retaggedPaths(f.path))
-    val out = commit { latest =>
-      val cur = latest.getOrElse(
-        sys.error(s"$root vanished during native $op — rerun"))
-      require(cur.version == ctx.baseVersion,
-        s"concurrent commit during native row-level $op on $root — rerun")
-      Pending(op, untouched ++ retagged ++ newEntries, m.schemaDdl,
-        m.partitionCols, m.bucketSpec, None, cdcFiles)
+    val newByPath = newEntries.map(e => e.path -> e).toMap
+    def images(paths: Seq[String], kind: String): Option[DataFrame] = {
+      val es = paths.flatMap(newByPath.get)
+      if (es.isEmpty) None else Some(changeImages(readEntries(m, es), kind))
     }
+    val cdc = captureChanges(m)(Seq(
+      preimages(deleteFrags, "delete"),
+      preimages(updateFrags, "update_preimage"),
+      images(updateFiles, "update_postimage"),
+      images(insertFiles, "insert")).flatten)
+    val out = commitRowLevel(op, m, m.files.filter(f => counts.contains(f.path)),
+      retagged ++ newEntries, None, cdc, m.schemaDdl)
     fs.delete(fragTmp, true)
     out
   }
@@ -5160,36 +4756,42 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     val m = manifest(ctx.baseVersion)
     val newEntries = nativeEntries(ctx, files)
     validateNewRows(m, newEntries)
-    commit { latest =>
-      val cur = latest.getOrElse(
-        sys.error(s"$root vanished during native overwrite — rerun"))
-      require(cur.version == ctx.baseVersion,
-        s"concurrent commit during native overwrite of $root — rerun")
-      Pending(OpOverwrite, newEntries, m.schemaDdl, m.partitionCols,
-        m.bucketSpec, None)
-    }
+    commitRowLevel(OpOverwrite, m, m.files, newEntries, None, None, m.schemaDdl)
   }
 
   /** Native `OverwriteByExpression(cond)` — the replaceWhere
     * semantics with the SOURCE already on disk as task-written files:
     * the predicate guard re-reads the immutable new files (every
     * inserted row must satisfy `cond`, the Delta rule), existing
-    * files are planned through the same zone-map candidate filter +
-    * tagged-scan discovery as [[rewriteWhere]], survivors of affected
-    * files rewrite copy-on-write, untouched files carry by reference,
-    * and CDC captures delete + insert images. */
+    * files are planned like [[deleteWhere]] (zone-map candidate test +
+    * one discovery scan), survivors of affected files rewrite
+    * copy-on-write, untouched files carry by reference, and CDC
+    * captures delete + insert images. */
   private[graft] def commitReplaceWhereNative(ctx: TxTable.DeltaWriteContext,
       filters: Seq[org.apache.spark.sql.sources.Filter],
       files: Seq[String]): Long = {
+    import org.apache.spark.sql.functions.{coalesce, lit => flit, not}
     val m = manifest(ctx.baseVersion)
-    val schema = StructType.fromDDL(m.schemaDdl)
-    val preds = sourcesToCatalyst(schema, filters)
+    val preds = sourcesToCatalyst(StructType.fromDDL(m.schemaDdl), filters)
     require(preds.length == filters.length,
       s"$root: untranslatable overwrite filters: $filters")
     val cond = preds.map(org.apache.spark.sql.graft.StreamShims.columnOf)
-      .reduceOption(_ && _)
-      .getOrElse(org.apache.spark.sql.functions.lit(true))
-    condOverwriteNative(ctx, m, cond, files, guardSource = true)
+      .reduceOption(_ && _).getOrElse(flit(true))
+    val hit = coalesce(cond, flit(false))
+    val newEntries = nativeEntries(ctx, files)
+    require(newEntries.isEmpty ||
+        readEntries(m, newEntries).where(not(hit)).limit(1).count() == 0,
+      s"$root: every overwrite-by-expression source row must satisfy " +
+        "the predicate — found rows outside it (append them instead)")
+    validateNewRows(m, newEntries)
+    val affected = planAffected(m, predicateCandidate(m, cond),
+      Some(_.where(hit))).entries
+    val survivors =
+      if (affected.isEmpty) Nil
+      else writeLayout(m, readEntries(m, affected).where(not(hit)))
+    commitRowLevel(OpReplace, m, affected, survivors ++ newEntries, None,
+      replaceChanges(m, readEntries(m, affected).where(hit), newEntries),
+      m.schemaDdl)
   }
 
   /** Native dynamic partition overwrite: replace exactly the hive
@@ -5207,81 +4809,17 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     val newEntries = nativeEntries(ctx, files)
     validateNewRows(m, newEntries)
     val touched = newEntries.map(_.partition).toSet
-    val (replaced, untouched) =
-      m.files.partition(f => touched.contains(f.partition))
-    val cdcFiles: Option[Seq[FileEntry]] =
-      if (!effCdf(m)) None
-      else Some {
-        import org.apache.spark.sql.functions.lit
-        val del = readEntries(m, replaced).drop(BucketCol)
-          .withColumn(ChangeTypeCol, lit("delete"))
-        val ins = readEntries(m, newEntries).drop(BucketCol)
-          .withColumn(ChangeTypeCol, lit("insert"))
-        writeDataFiles(del.unionByName(ins), Nil,
-          withStats = false, enforce = false)._1
-      }
-    commit { latest =>
-      val cur = latest.getOrElse(
-        sys.error(s"$root vanished during native dynamic overwrite — rerun"))
-      require(cur.version == ctx.baseVersion,
-        s"concurrent commit during native dynamic overwrite of $root — rerun")
-      Pending(OpReplace, untouched ++ newEntries, m.schemaDdl,
-        m.partitionCols, m.bucketSpec, None, cdcFiles)
-    }
+    val replaced = m.files.filter(f => touched.contains(f.partition))
+    commitRowLevel(OpReplace, m, replaced, newEntries, None,
+      replaceChanges(m, readEntries(m, replaced), newEntries), m.schemaDdl)
   }
 
-  private def condOverwriteNative(ctx: TxTable.DeltaWriteContext,
-      m: Manifest, cond: Column, files: Seq[String],
-      guardSource: Boolean): Long = {
-    import org.apache.spark.sql.functions.{coalesce, lit => flit, not}
-    val schema = StructType.fromDDL(m.schemaDdl)
-    val newEntries = nativeEntries(ctx, files)
-    val hit = coalesce(cond, flit(false))
-    if (guardSource && newEntries.nonEmpty) {
-      val offending = readEntries(m, newEntries).where(not(hit))
-        .limit(1).count()
-      require(offending == 0,
-        s"$root: every overwrite-by-expression source row must satisfy " +
-          "the predicate — found rows outside it (append them instead)")
-    }
-    validateNewRows(m, newEntries)
-    val candidate = candidateFilter(schema,
-      analyzedPredicate(schema, cond).toSeq, physNameOf(m, _))
-    val candidates = m.files.filter(candidate)
-    val srcCol = "__src_file"
-    val affectedPaths: Set[String] =
-      if (candidates.isEmpty) Set.empty
-      else readEntriesTagged(m, candidates, Some(srcCol)).where(hit)
-        .select(col(srcCol)).distinct().collect()
-        .map(r => relativize(new Path(new java.net.URI(r.getString(0))))).toSet
-    val (affected, untouched) = m.files.partition(f => affectedPaths(f.path))
-    val survivorFiles =
-      if (affected.isEmpty) Nil
-      else {
-        val survivors = readEntries(m, affected).where(not(hit))
-        val data = m.bucketSpec.map(bucketedWriteFrame(survivors, _))
-          .getOrElse(survivors)
-        writeDataFiles(data, m.partitionCols)._1
-      }
-    val cdcFiles: Option[Seq[FileEntry]] =
-      if (!effCdf(m)) None
-      else Some {
-        val del = readEntries(m, affected).where(hit).drop(BucketCol)
-          .withColumn(ChangeTypeCol, flit("delete"))
-        val ins = readEntries(m, newEntries).drop(BucketCol)
-          .withColumn(ChangeTypeCol, flit("insert"))
-        writeDataFiles(del.unionByName(ins), Nil,
-          withStats = false, enforce = false)._1
-      }
-    commit { latest =>
-      val cur = latest.getOrElse(
-        sys.error(s"$root vanished during native overwrite — rerun"))
-      require(cur.version == ctx.baseVersion,
-        s"concurrent commit during native overwrite of $root — rerun")
-      Pending(OpReplace, untouched ++ survivorFiles ++ newEntries,
-        m.schemaDdl, m.partitionCols, m.bucketSpec, None, cdcFiles)
-    }
-  }
+  /** Change records of a native overwrite: `removed` rows as deletes,
+    * the new entries' rows as inserts. */
+  private def replaceChanges(m: Manifest, removed: => DataFrame,
+      newEntries: Seq[FileEntry]): Option[Seq[FileEntry]] =
+    captureChanges(m)(Seq(changeImages(removed, "delete"),
+      changeImages(readEntries(m, newEntries), "insert")))
 
   /** Task-written files → manifest entries (stats + layout values
     * from the shadow-dir parse); refuses if any reported file is
@@ -5647,12 +5185,6 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     else abs
   }
 
-  /** Optimistic-concurrency commit loop: compose the next snapshot
-    * against the CURRENT latest, publish its DELTA as version N; on
-    * collision re-read and retry. The published file holds only the
-    * changed entries (O(delta) bytes); the full state rides the JVM
-    * cache and, every [[TxTable.CheckpointInterval]] commits, a
-    * checkpoint file. */
   /** Transactional identity-highWater advance, applied to EVERY commit
     * inside the loop: for each identity column, fold the committed
     * files' max into the stored highWater — minted and supplied values
@@ -5707,6 +5239,12 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     }
   }
 
+  /** Optimistic-concurrency commit loop: compose the next snapshot
+    * against the CURRENT latest, publish its DELTA as version N; on
+    * collision re-read and retry. The published file holds only the
+    * changed entries (O(delta) bytes); the full state rides the JVM
+    * cache and, every [[TxTable.CheckpointInterval]] commits, a
+    * checkpoint file. */
   private def commit(compose: Option[Manifest] => Pending): Long = {
     fs.mkdirs(logDir)
     var attempts = 0
@@ -5721,16 +5259,6 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
         latest.map(_.properties).getOrElse(Map.empty))
       val colMap = p.colMap.getOrElse(
         latest.map(_.colMap).getOrElse(Map.empty))
-      val addedEntries = {
-        val prevByPath0 = latest.map(_.files).getOrElse(Nil)
-          .map(f => f.path -> f).toMap
-        p.files.filterNot(f => prevByPath0.get(f.path).contains(f))
-      }
-      val props = advanceIdentity(props0, addedEntries, colMap, p.schemaDdl)
-      val retired = p.retired.getOrElse(
-        latest.map(_.retired).getOrElse(Nil))
-      val m = Manifest(v, p.operation, p.schemaDdl, p.files,
-        p.partitionCols, p.bucketSpec, txns, props, colMap, retired)
       // the delta: composed files vs the previous snapshot — entries
       // carried by reference (identical ENTRY, not just path: a MoR
       // delete re-tags an unchanged path with a new deletion vector)
@@ -5740,9 +5268,15 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
       val prevFiles = latest.map(_.files).getOrElse(Nil)
       val prevByPath = prevFiles.map(f => f.path -> f).toMap
       val newByPath = p.files.map(f => f.path -> f).toMap
+      val added = p.files.filterNot(f => prevByPath.get(f.path).contains(f))
+      val props = advanceIdentity(props0, added, colMap, p.schemaDdl)
+      val retired = p.retired.getOrElse(
+        latest.map(_.retired).getOrElse(Nil))
+      val m = Manifest(v, p.operation, p.schemaDdl, p.files,
+        p.partitionCols, p.bucketSpec, txns, props, colMap, retired)
       val delta = CommitDelta(v, p.operation, p.schemaDdl, p.partitionCols,
         p.bucketSpec, p.txn,
-        add = p.files.filterNot(f => prevByPath.get(f.path).contains(f)),
+        add = added,
         remove = prevFiles.filterNot(f =>
           newByPath.get(f.path).contains(f)).map(_.path),
         cdc = p.cdcFiles,
@@ -5887,6 +5421,9 @@ object TxTable {
   private[core] val DvPathCol = "__dv_path"
   private[core] val DvPosCol = "__dv_pos"
   private[core] val DvSrcCol = "__dv_src"
+
+  /** Source-file tag of a row-level write's discovery scan. */
+  private val SrcFileCol = "__src_file"
 
   /** Replayed mirror-checkpoint state: live add lines (verbatim,
     * dataChange=false), unexpired tombstones, and the log's latest
@@ -6355,6 +5892,12 @@ object TxTable {
         * reads physically-named fields in the logical order — rows
         * are positional, the rename is pure metadata. */
       physNameOf: String => String)
+
+  /** The plan of a row-level write: the affected entries and, for a
+    * positional plan with candidates, the matching rows and their
+    * `(DvPathCol, DvPosCol)` pairs, plus the matches per entry path. */
+  private final case class Affected(entries: Seq[FileEntry],
+      rows: Option[DataFrame], pairs: Option[DataFrame], counts: Map[String, Long])
 
   /** What a write operation asks the commit loop to publish.
     * `cdcFiles`: row-level change files (written out-of-line, referenced
